@@ -70,7 +70,25 @@ def sql_over_views(
     avoided), and scoped to `session` (foreachBatch bodies run on a
     per-batch clone, so nothing leaks to the main session). Every
     frame must already live on `session`.
+
+    `literals` are formatted into the SQL text verbatim, so only
+    numbers are accepted (int or float, not bool); anything else
+    raises TypeError here rather than surfacing as a syntax error or
+    an injected fragment far from the call site.
+
+    Assumes classic (non-Connect) PySpark: ``session.sql`` analyzes
+    the statement eagerly, so the returned frame is bound to the
+    plans the views point at NOW, and a later call that re-registers
+    the same ``_hha_fused_*`` name cannot retarget it. Under Spark
+    Connect analysis is lazy and that no longer holds — re-audit this
+    helper before any Connect migration.
     """
+    for key, value in literals.items():
+        if isinstance(value, bool) or not isinstance(value, (int, float)):
+            raise TypeError(
+                f"sql_over_views literal {key}={value!r} must be an int "
+                "or float"
+            )
     names = {}
     for key, df in (frames or {}).items():
         name = f"_hha_fused_{key}"

@@ -57,60 +57,45 @@ _MODULES = (
 )
 
 # Order is the driver's verification window: it oracle-checks the FIRST
-# 50 names yielded. Round-11 rotation (the r10 verdict's "Next round"
-# #1, plus this round's code-touched surface): position 1 is the
-# round-11 NEW gate `stream_curation_spilled` (the label-spill scale
-# fix under the batch oracle). Positions 2-16 are the
-# gates whose RESULT VALUES changed this round — the MinHash kernel
-# now derives its 8 hash families as 8-hex-char slices of 2 salted
-# md5 digests (operators/dedup.py::minhash_signatures, 4x fewer md5
-# invocations; the oracle's _SIG_COLS mirrors the identical
-# expression), so every oracle-gated MinHash consumer needs a fresh
-# driver row. Positions 17-18: the two remaining consumers of the
-# gopher selectExpr rewrite (values identical, plan-construction
-# only; the funnel gates already sit in the front). Positions 19-27:
-# the nine r6-vintage rows the r10 verdict ordered first (4 rounds
-# stale, text.py touched again this round). Positions 28-32: the
-# five PQ-LUT/IVF-consumer ann gates whose operators/pq.py / ivf.py
-# changed after their r9 rows froze. Positions 33-36: the four
-# spike_events_* parity rows (r9-vintage; also re-adjudicates the
-# r10 control sweep's 1.4x blip — verdict finding #3). Positions
-# 37-50: the r7-vintage tail in name order (first 14 of 48; the
-# rest rotate in r12).
-# Names here that fall out of the registry are ignored defensively;
-# queries not listed follow in module order.
+# 50 names yielded. Current rotation: positions 1-9 are the gates
+# whose code changed with the single stream starter
+# (streaming/runner.py::start_file_stream) and the public store module
+# (streaming/store.py) — every store-backed gate plus the two
+# foreachBatch gates and the spike-detector gate that now start
+# through it. Positions 10-43 are the 34 rows whose last driver check
+# is the round-7 window (the oldest in the registry), in name order;
+# positions 44-50 are the first 7 round-8-vintage rows in name order.
+# The CORRECTNESS_r*.json artifacts give each name's last checked
+# round. Names here that fall out of the registry are ignored
+# defensively; queries not listed follow in module order.
 _NEVER_CHECKED_FIRST = (
-    # -- the round-11 NEW gate (label-spill path under the oracle) --
-    "stream_curation_spilled",
-    # -- 15 minhash-result-changed gates (sliced-digest kernel) --
-    "stream_curation_compacted", "stream_curation_funnel",
-    "corpus_curation_pipeline", "dedup_minhash_lsh",
-    "dedup_minhash_recall", "dedup_incremental",
-    "dedup_quality_survivors", "dedup_canonical_pick",
-    "dedup_clusters", "dedup_clusters_star", "dedup_graph_pagerank",
-    "dedup_graph_triangles", "dedup_text_embedding_drift",
-    "pretraining_corpus_selection", "stream_dedup_incremental",
-    # -- 2 gopher plan-rewrite consumers (values unchanged) --
-    "text_gopher_quality", "quality_gate_agreement",
-    # -- 9 r6-vintage rows (oldest in the registry; r10 verdict #1) --
-    "text_stats_docs", "text_langid", "text_quality",
-    "text_token_count", "text_bigram_lm_score", "text_bm25_topk",
-    "quality_classifier_trained", "multimodal_blob_stats",
-    "multimodal_frame_sample",
-    # -- 5 ann gates with post-freeze pq.py/ivf.py Arrow-frame rows --
-    "ann_topk_pq", "ann_topk_ivfpq_residual", "ann_two_stage_rerank",
-    "ann_topk_ivfpq", "ann_pq_recall",
-    # -- 4 spike parity rows (r9-vintage + the control-sweep blip) --
-    "spike_events_alerts", "spike_events_compare",
-    "spike_events_gated", "spike_events_net_rollup",
-    # -- r7-vintage tail, name order (15 of 48; rest rotate in r12) --
-    "approx_stats", "avg_qty_per_part", "corpus_dsir_weights",
-    "corpus_select_training", "corpus_train_val_test",
-    "customer_balance_quartiles", "customer_name_features",
-    "customer_order_stats", "customer_running_spend",
-    "customer_window_suite", "customers_without_orders",
-    "daily_activity_fulljoin", "dedup_survivors",
-    "distinct_parts_per_flag",
+    # -- 9 gates on the new stream starter / store API --
+    "stream_sessionize_incremental", "stream_sessionize_disorder",
+    "stream_attribution_disorder", "stream_curation_funnel",
+    "stream_curation_compacted", "stream_curation_spilled",
+    "stream_cms_heavy", "stream_temperature_mixture",
+    "stream_spike_alerts",
+    # -- 34 round-7-vintage rows, name order --
+    "event_value_stats", "events_json_extract",
+    "events_pairs_within_30min", "events_session_window",
+    "events_sessionize", "events_value_histogram",
+    "lineitem_measures_unpivot", "lineitem_price_qty_corr",
+    "lineitem_status_pivot", "median_qty_per_flag",
+    "nation_region_rollup", "nations_customers_only",
+    "nations_with_both", "order_gap_days", "orders_by_month",
+    "orders_cube", "orders_grouping_sets", "orders_with_big_lineitem",
+    "part_size_classes", "q12_priority_lines", "q14_promo_revenue",
+    "q17_small_quantity_revenue", "q18_large_volume_customers",
+    "q21_exclusive_returns", "q22_inactive_rich_customers",
+    "q3_shipping_priority", "q4_priority_returns",
+    "q5_local_supplier_volume", "q7_volume_shipping",
+    "sql_nation_revenue", "stratified_sample_docs",
+    "suppliers_in_rich_nations", "top3_customers_per_nation",
+    "top_revenue_orders",
+    # -- first 7 round-8-vintage rows, name order --
+    "ann_ivf_recall", "ann_topk_ivf_trained", "benchmark_contamination",
+    "copurchase_part_pairs", "corpus_dup_spans", "corpus_mixture_weights",
+    "corpus_pii_scrub",
 )
 
 

@@ -38,6 +38,7 @@ from hha_spark.queries.llm_ops import (
     _docs,
 )
 from hha_spark.sources.tables import events_ts_us, load_table
+from hha_spark.streaming.runner import start_file_stream
 
 _QUERY_SEQ = itertools.count()
 
@@ -805,24 +806,23 @@ def stream_sessionize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     from hha_spark.streaming.sessionize import (
         final_sessions,
-        run_streaming_sessionizer,
+        make_sessionize_processor,
     )
 
     ev_raw = load_table(spark, sf_dir, "events")
     ev = ev_raw.select("user_id", events_ts_us(ev_raw).alias("ts_us"))
     with _gate_scratch("hha_stream_sess_") as tmp, _gate_shuffle(spark):
         in_dir = _write_time_slices(ev, tmp, SESS_SLICES)
-        q = run_streaming_sessionizer(
+        start_file_stream(
             spark,
             data_root=in_dir,
             schema="user_id long, ts_us long",
-            store_root=f"{tmp}/store",
+            process=make_sessionize_processor(
+                spark, store_root=f"{tmp}/store", gap_us=SESS_GAP_US
+            ),
             checkpoint=f"{tmp}/ckpt",
-            gap_us=SESS_GAP_US,
             max_files_per_trigger=2,
-            available_now=True,
-        )
-        q.awaitTermination()
+        ).awaitTermination()
         sessions = final_sessions(spark, store_root=f"{tmp}/store")
         return _sessions_rollup(spark, sessions)
 
@@ -935,19 +935,14 @@ def stream_cms_heavy(
 
     with _gate_scratch("hha_stream_cms_") as tmp, _gate_shuffle(spark):
         docs.repartition(4).write.parquet(f"{tmp}/in")
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", 2)
-            .load(f"{tmp}/in")
-        )
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        start_file_stream(
+            spark,
+            data_root=f"{tmp}/in",
+            schema=docs.schema,
+            process=merge_batch,
+            checkpoint=f"{tmp}/ckpt",
+            max_files_per_trigger=2,
+        ).awaitTermination()
 
     counters = _local_rows(
         spark,
@@ -1041,19 +1036,14 @@ def stream_temperature_mixture(
 
     with _gate_scratch("hha_stream_mix_") as tmp, _gate_shuffle(spark):
         docs.repartition(4).write.parquet(f"{tmp}/in")
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", 2)
-            .load(f"{tmp}/in")
-        )
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        start_file_stream(
+            spark,
+            data_root=f"{tmp}/in",
+            schema=docs.schema,
+            process=merge_batch,
+            checkpoint=f"{tmp}/ckpt",
+            max_files_per_trigger=2,
+        ).awaitTermination()
 
     per_source = _local_rows(
         spark,
@@ -1163,7 +1153,7 @@ def stream_sessionize_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hha_spark.streaming.sessionize import (
         final_sessions_disorder,
-        run_disorder_sessionizer,
+        make_disorder_sessionize_processor,
     )
 
     ev_raw = load_table(spark, sf_dir, "events")
@@ -1172,18 +1162,19 @@ def stream_sessionize_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         in_dir = _write_disorder_slices(
             ev, tmp, SESS_SLICES, SESS_DISORDER_US
         )
-        q = run_disorder_sessionizer(
+        start_file_stream(
             spark,
             data_root=in_dir,
             schema="user_id long, ts_us long",
-            store_root=f"{tmp}/store",
+            process=make_disorder_sessionize_processor(
+                spark,
+                store_root=f"{tmp}/store",
+                gap_us=SESS_GAP_US,
+                disorder_us=SESS_DISORDER_US,
+            ),
             checkpoint=f"{tmp}/ckpt",
-            gap_us=SESS_GAP_US,
-            disorder_us=SESS_DISORDER_US,
             max_files_per_trigger=2,
-            available_now=True,
-        )
-        q.awaitTermination()
+        ).awaitTermination()
         sessions = final_sessions_disorder(
             spark,
             store_root=f"{tmp}/store",
@@ -1235,7 +1226,7 @@ def stream_attribution_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hha_spark.streaming.joins import (
         final_attributions,
-        run_disorder_attribution,
+        make_disorder_attribution_processor,
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -1250,18 +1241,19 @@ def stream_attribution_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         in_dir = _write_disorder_slices(
             two, tmp, SESS_SLICES, ATTR_DISORDER_SEC, ts_col="ts_s"
         )
-        q = run_disorder_attribution(
+        start_file_stream(
             spark,
             data_root=in_dir,
             schema="user_id long, ts_s long, etype string",
-            store_root=f"{tmp}/store",
+            process=make_disorder_attribution_processor(
+                spark,
+                store_root=f"{tmp}/store",
+                max_delay_sec=ATTR_MAX_DELAY_SEC,
+                disorder_sec=ATTR_DISORDER_SEC,
+            ),
             checkpoint=f"{tmp}/ckpt",
-            max_delay_sec=ATTR_MAX_DELAY_SEC,
-            disorder_sec=ATTR_DISORDER_SEC,
             max_files_per_trigger=2,
-            available_now=True,
-        )
-        q.awaitTermination()
+        ).awaitTermination()
         pairs = final_attributions(
             spark,
             store_root=f"{tmp}/store",
@@ -1293,6 +1285,79 @@ _CUR_ROLLUP_SCHEMA = (
 )
 
 
+def _curation_gate(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    prefix: str,
+    slice_col,
+    n_slices: int,
+    max_files_per_trigger: int,
+    must_fire: tuple[str, str] | None = None,
+    **processor_kw,
+) -> DataFrame:
+    """Shared body of the stream_curation_* gates: the documents table
+    replays as `n_slices` md5-interleaved files through the incremental
+    funnel processor (`processor_kw` selects the path under test); the
+    flushed per-source rollup is collected before the scratch dirs
+    vanish. `must_fire=(stats key, what)` raises unless the processor's
+    counter proves that path ran — an explicit raise, not assert:
+    the fired invariant is the reason such a gate exists, and
+    `python -O` strips asserts."""
+    from hha_spark.queries.corpus import BUDGET_PCT, FILL_SALT
+    from hha_spark.streaming.curation_stream import (
+        final_curation_funnel,
+        make_curation_funnel_processor,
+    )
+
+    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
+    stats: dict = {}
+    # Width 4, AQE OFF. The r9-era shape wanted AQE (its heavy
+    # gopher/repartition plan had stages worth re-planning); after
+    # the round-10 rewrite — shuffle-free gopher map, single
+    # mega-probe action, exchange-free write — each epoch's plan is
+    # lean enough that runtime re-planning has nothing to optimize,
+    # and AQE's per-materialized-stage barrier shows up as job count
+    # (a trace measured 36 jobs for 2 epochs with AQE on). Measured
+    # honestly: warm in-session sweeps favored off by ~1 s, but
+    # fresh-process A/B (the driver's shape) shows parity within the
+    # host's ±0.8 s noise — off is kept for the lower job count, not
+    # a claimed wall win. At production batch volumes flip AQE back
+    # on with the data.
+    with _gate_scratch(prefix) as tmp, _gate_shuffle(
+        spark, partitions="4", aqe="false"
+    ):
+        start_file_stream(
+            spark,
+            data_root=_write_file_slices(docs, slice_col, tmp, n_slices),
+            schema="doc_id long, source string, text string",
+            process=make_curation_funnel_processor(
+                spark, store_root=f"{tmp}/store", stats=stats, **processor_kw
+            ),
+            checkpoint=f"{tmp}/ckpt",
+            max_files_per_trigger=max_files_per_trigger,
+        ).awaitTermination()
+        if must_fire is not None and stats.get(must_fire[0], 0) < 1:
+            raise RuntimeError(
+                f"gate fixture no longer exercises {must_fire[1]}: {stats}"
+            )
+        out = final_curation_funnel(
+            spark,
+            store_root=f"{tmp}/store",
+            budget_frac_pct=BUDGET_PCT,
+            salt=FILL_SALT,
+        )
+        return _local_rows(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
+
+
+def _curation_slices(n: int):
+    """md5(doc_id)-interleaved slice index in [0, n): every slice
+    spans the whole id space."""
+    from hha_spark.operators.sketch import md5_mod
+
+    return md5_mod("curslice|", F.col("doc_id").cast("string"), n)
+
+
 def stream_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The END-TO-END curation pipeline maintained INCREMENTALLY
     across micro-batches (streaming/curation_stream.py): Gopher
@@ -1317,53 +1382,14 @@ def stream_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     one node->label row per clustered doc; state is the curated
     corpus store itself. See streaming/curation_stream.py.
     """
-    from hha_spark.operators.sketch import md5_mod
-    from hha_spark.queries.corpus import BUDGET_PCT, FILL_SALT
-    from hha_spark.streaming.curation_stream import (
-        final_curation_funnel,
-        run_streaming_curation,
+    return _curation_gate(
+        spark,
+        sf_dir,
+        prefix="hha_stream_cur_",
+        slice_col=_curation_slices(3),
+        n_slices=3,
+        max_files_per_trigger=2,
     )
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
-    # Width 4, AQE OFF. The r9-era shape wanted AQE (its heavy
-    # gopher/repartition plan had stages worth re-planning); after
-    # the round-10 rewrite — shuffle-free gopher map, single
-    # mega-probe action, exchange-free write — each epoch's plan is
-    # lean enough that runtime re-planning has nothing to optimize,
-    # and AQE's per-materialized-stage barrier shows up as job count
-    # (a trace measured 36 jobs for 2 epochs with AQE on). Measured
-    # honestly: warm in-session sweeps favored off by ~1 s, but
-    # fresh-process A/B (the driver's shape) shows parity within the
-    # host's ±0.8 s noise — off is kept for the lower job count, not
-    # a claimed wall win. At production batch volumes flip AQE back
-    # on with the data.
-    with _gate_scratch("hha_stream_cur_") as tmp, _gate_shuffle(
-        spark, partitions="4", aqe="false"
-    ):
-        in_dir = _write_file_slices(
-            docs,
-            md5_mod("curslice|", F.col("doc_id").cast("string"), 3),
-            tmp,
-            3,
-        )
-        q = run_streaming_curation(
-            spark,
-            data_root=in_dir,
-            schema="doc_id long, source string, text string",
-            store_root=f"{tmp}/store",
-            checkpoint=f"{tmp}/ckpt",
-            max_files_per_trigger=2,
-            available_now=True,
-        )
-        q.awaitTermination()
-        out = final_curation_funnel(
-            spark,
-            store_root=f"{tmp}/store",
-            budget_frac_pct=BUDGET_PCT,
-            salt=FILL_SALT,
-        )
-        # collected before the gate's scratch directories vanish
-        return _local_rows(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
 
 
 QUERIES["stream_curation_funnel"] = stream_curation_funnel
@@ -1376,8 +1402,8 @@ ORACLES["stream_curation_funnel"] = _CORPUS_ORACLES[
 
 def stream_curation_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming curation funnel with LIVE store compaction: the
-    documents table replays as three md5-interleaved files delivered
-    ONE PER MICRO-BATCH with `compact_every=1`, so a real minor fold
+    documents table replays as md5-interleaved files delivered ONE
+    PER MICRO-BATCH with `compact_every=1`, so a real minor fold
     (streaming/store.py) fires BETWEEN epochs — version stubs below
     the newest two merge into a base dir while the stream is still
     running — and later epochs' candidate verification plus the
@@ -1389,75 +1415,32 @@ def stream_curation_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the full funnel semantics, value-exact — previously that
     contract was pinned only by pytest (test_store_compaction.py).
 
+    FOUR slices, one per micro-batch: a minor fold needs >= 2
+    foldable stubs strictly below the newest two versions, so 4
+    epochs is the minimum stream on which compact_every=1 fires a
+    real fold (after epoch 3: olds = [v0, v1]). Sizes are SKEWED
+    (1/8, 1/8, 1/8, 5/8 via min(md5 mod 8, 3)): the fold, the
+    cross-batch merges, and the folded-history reads are exercised
+    identically, but three of the four epochs carry an eighth of the
+    corpus each, so the gate does not pay the full per-epoch funnel
+    cost four times (measured ~12-14 s -> ~8 s).
+
     Scale: identical to stream_curation_funnel (compaction adds one
     bounded merge write per fold, amortized linear — the LSM minor
-    shape); the stats assert makes a silent no-fold regression
-    (e.g. a version-layout change that stops the fold from firing)
-    fail the gate rather than quietly un-verify it.
+    shape); the fired check makes a silent no-fold regression (e.g.
+    a version-layout change that stops the fold from firing) fail
+    the gate rather than quietly un-verify it.
     """
-    from hha_spark.operators.sketch import md5_mod
-    from hha_spark.queries.corpus import BUDGET_PCT, FILL_SALT
-    from hha_spark.streaming.curation_stream import (
-        final_curation_funnel,
-        run_streaming_curation,
+    return _curation_gate(
+        spark,
+        sf_dir,
+        prefix="hha_stream_curc_",
+        slice_col=F.least(_curation_slices(8), F.lit(3)),
+        n_slices=4,
+        max_files_per_trigger=1,
+        must_fire=("compactions", "a live fold"),
+        compact_every=1,
     )
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
-    stats: dict = {}
-    # width 4, AQE off — same sweep-backed knobs as
-    # stream_curation_funnel (see its comment)
-    with _gate_scratch("hha_stream_curc_") as tmp, _gate_shuffle(
-        spark, partitions="4", aqe="false"
-    ):
-        # FOUR slices, one per micro-batch: a minor fold needs >= 2
-        # foldable stubs strictly below the newest two versions, so 4
-        # epochs is the minimum stream on which compact_every=1 fires
-        # a real fold (after epoch 3: olds = [v0, v1]). Sizes are
-        # SKEWED (1/8, 1/8, 1/8, 5/8 via min(md5 mod 8, 3)): the
-        # fold, the cross-batch merges, and the folded-history reads
-        # are exercised identically, but three of the four epochs
-        # carry an eighth of the corpus each, so the gate does not
-        # pay the full per-epoch funnel cost four times (measured
-        # ~12-14 s -> ~8 s; delivery stays md5-interleaved, so every
-        # slice still spans the id space)
-        in_dir = _write_file_slices(
-            docs,
-            F.least(
-                md5_mod("curslice|", F.col("doc_id").cast("string"), 8),
-                F.lit(3),
-            ),
-            tmp,
-            4,
-        )
-        q = run_streaming_curation(
-            spark,
-            data_root=in_dir,
-            schema="doc_id long, source string, text string",
-            store_root=f"{tmp}/store",
-            checkpoint=f"{tmp}/ckpt",
-            max_files_per_trigger=1,
-            available_now=True,
-            stats=stats,
-            compact_every=1,
-        )
-        q.awaitTermination()
-        # explicit raise, not assert: the fold-fired invariant is the
-        # reason this gate exists, and `python -O` strips asserts —
-        # a bare assert would silently un-verify the compaction
-        # coverage in optimized runs
-        if stats.get("compactions", 0) < 1:
-            raise RuntimeError(
-                "gate fixture no longer exercises a live fold: "
-                f"{stats}"
-            )
-        out = final_curation_funnel(
-            spark,
-            store_root=f"{tmp}/store",
-            budget_frac_pct=BUDGET_PCT,
-            salt=FILL_SALT,
-        )
-        # collected before the gate's scratch directories vanish
-        return _local_rows(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
 
 
 QUERIES["stream_curation_compacted"] = stream_curation_compacted
@@ -1491,53 +1474,16 @@ def stream_curation_spilled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-parquet serialize + one small file round-trip per epoch —
     O(labels) bytes written once, never re-broadcast per stage.
     """
-    from hha_spark.operators.sketch import md5_mod
-    from hha_spark.queries.corpus import BUDGET_PCT, FILL_SALT
-    from hha_spark.streaming.curation_stream import (
-        final_curation_funnel,
-        run_streaming_curation,
+    return _curation_gate(
+        spark,
+        sf_dir,
+        prefix="hha_stream_curs_",
+        slice_col=_curation_slices(3),
+        n_slices=3,
+        max_files_per_trigger=2,
+        must_fire=("label_spills", "the label spill"),
+        label_spill_rows=0,
     )
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
-    stats: dict = {}
-    # width 4, AQE off — same sweep-backed knobs as
-    # stream_curation_funnel (see its comment)
-    with _gate_scratch("hha_stream_curs_") as tmp, _gate_shuffle(
-        spark, partitions="4", aqe="false"
-    ):
-        in_dir = _write_file_slices(
-            docs,
-            md5_mod("curslice|", F.col("doc_id").cast("string"), 3),
-            tmp,
-            3,
-        )
-        q = run_streaming_curation(
-            spark,
-            data_root=in_dir,
-            schema="doc_id long, source string, text string",
-            store_root=f"{tmp}/store",
-            checkpoint=f"{tmp}/ckpt",
-            max_files_per_trigger=2,
-            available_now=True,
-            stats=stats,
-            label_spill_rows=0,
-        )
-        q.awaitTermination()
-        # explicit raise, not assert: the spill-fired invariant is
-        # the reason this gate exists (`python -O` strips asserts)
-        if stats.get("label_spills", 0) < 1:
-            raise RuntimeError(
-                "gate fixture no longer exercises the label spill: "
-                f"{stats}"
-            )
-        out = final_curation_funnel(
-            spark,
-            store_root=f"{tmp}/store",
-            budget_frac_pct=BUDGET_PCT,
-            salt=FILL_SALT,
-        )
-        # collected before the gate's scratch directories vanish
-        return _local_rows(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
 
 
 QUERIES["stream_curation_spilled"] = stream_curation_spilled

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hha_spark.schemas import ALERTS_SCHEMA
+from hha_spark.sources import fs
 
 
 def append_alerts(alerts: DataFrame, table_path: str, *, detected_at: int) -> None:
@@ -39,12 +40,14 @@ def recent_alerts(
 ) -> DataFrame | None:
     """Alerts raised within the TTL — the dedup anti-join's right side.
 
-    Returns None when the table doesn't exist yet (first cycle).
+    Returns None when the table doesn't exist yet (first cycle). Only
+    absence means "no table": any other failure (an unreachable or
+    unsupported filesystem, a permissions error) raises, because
+    returning None would silently switch TTL dedup off.
     """
-    try:
-        df = spark.read.schema(ALERTS_SCHEMA).parquet(table_path)
-    except Exception:  # noqa: BLE001 — path-not-found on first run
+    if not fs.exists(spark, table_path):
         return None
+    df = spark.read.schema(ALERTS_SCHEMA).parquet(table_path)
     return df.where(F.col("detected_at") > F.lit(now - ttl_sec))
 
 
@@ -65,14 +68,12 @@ def compact_alerts(
     detection cycles (the reference's loop is likewise serial,
     hha.py:315-327), between cycles. A crash between the renames
     leaves the data intact at `<table>__old`; the next compaction (or
-    a manual rename) recovers it. Returns the retained row count.
+    a manual rename) recovers it. Returns the retained row count (0
+    when the table does not exist yet; any other failure raises).
     """
-    from hha_spark.sources import fs
-
-    try:
-        df = spark.read.schema(ALERTS_SCHEMA).parquet(table_path)
-    except Exception:  # noqa: BLE001 — nothing to compact yet
+    if not fs.exists(spark, table_path):
         return 0
+    df = spark.read.schema(ALERTS_SCHEMA).parquet(table_path)
     kept = df.where(F.col("detected_at") > F.lit(now - keep_sec))
     tmp = f"{table_path}__compact_tmp"
     kept.write.mode("overwrite").parquet(tmp)

@@ -3,7 +3,7 @@
 The reference reads exactly one format (parquet over HDFS). A usable
 engine needs the standard set; these wrappers pin explicit schemas
 (never inferSchema in production paths) and centralize options.
-Lakehouse table formats (Delta/Iceberg/Hudi) need their runtime jars,
+Lakehouse table formats (Delta) and Kafka need their runtime jars,
 which this environment doesn't ship — those entry points are explicit
 stubs behind import probes, not silent fallbacks.
 """
@@ -30,10 +30,6 @@ def read_csv(
 
 def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return spark.read.schema(schema).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
 
 
 def read_binary_files(
@@ -104,7 +100,7 @@ def upsert_parquet(
 
     At 100 TB this full-table rewrite is the wrong tool — that is
     exactly what Delta/Iceberg row-level MERGE exists for (see the
-    jar-gated readers below); this covers the gap for plain-parquet
+    jar-gated Delta reader below); this covers the gap for plain-parquet
     deployments where updates are rare and batch-shaped, and for
     partition-scoped rewrites.
     """
@@ -176,27 +172,7 @@ def read_kafka_stream(
     )
 
 
-def write_kafka_stream(
-    df: DataFrame, *, bootstrap: str, topic: str, checkpoint: str
-):
-    """Streaming Kafka sink (expects key/value columns) — jar-gated."""
-    _require_kafka(df.sparkSession)
-    return (  # pragma: no cover - jar-dependent
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
 def read_delta(spark: SparkSession, path: str) -> DataFrame:
     """Delta Lake table read — stub until delta-spark jars are present."""
     _require("delta", "Delta Lake support")
     return spark.read.format("delta").load(path)  # pragma: no cover
-
-
-def read_iceberg(spark: SparkSession, table: str) -> DataFrame:
-    """Iceberg table read — stub until iceberg-spark-runtime is present."""
-    _require("pyiceberg", "Apache Iceberg support")
-    return spark.read.format("iceberg").load(table)  # pragma: no cover

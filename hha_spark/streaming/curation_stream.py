@@ -2,7 +2,7 @@
 (Gopher quality rules -> MinHash-LSH near-dup clustering of the
 survivors -> temperature mixture -> token-budget fill) maintained
 ACROSS micro-batches, composing the round-8 achievements: the
-versioned kind-partitioned store discipline (streaming/sessionize.py)
+versioned kind-partitioned store discipline (streaming/store.py)
 applied to the composed curation chain (queries/corpus.py::
 curation_funnel). `stream_dedup_incremental` proved the streaming
 shape for LSH screening alone; this module proves it for the whole
@@ -105,11 +105,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hha_spark.functions.local import sql_over_views
-from hha_spark.streaming.sessionize import (
-    _prune_store_versions,
-    _read_versioned,
-    read_kind_history,
-)
+from hha_spark.sources import fs
+from hha_spark.streaming import store
 
 _CUR_STORE_SCHEMA = (
     "doc_id long, doc_id_b long, source string, n_tokens long, "
@@ -334,8 +331,6 @@ def _uf_labels(
         )
     import pyarrow.parquet as pq
 
-    from hha_spark.sources import fs
-
     buf = pa.BufferOutputStream()
     pq.write_table(out, buf)
     fs.write_bytes(
@@ -377,7 +372,8 @@ def make_curation_funnel_processor(
     between epochs on the stream's own thread and touches only
     versions strictly below the newest two, which no future epoch or
     retry reads differently (the store module's reader-equivalence
-    argument)."""
+    argument). Building the processor heals any crashed store
+    compaction first (streaming/store.py)."""
     from hha_spark.operators.cluster import (
         SMALL_GRAPH_EDGES,
         connected_components,
@@ -391,6 +387,7 @@ def make_curation_funnel_processor(
     from hha_spark.operators.text import gopher_repetition_rules
 
     cap = MAX_LSH_BUCKET if max_bucket is None else max_bucket
+    store.recover_compaction(spark, store_root)
 
     def _clock(key: str, t0: float) -> float:
         """Accumulate wall seconds per phase into `stats` (no-op when
@@ -422,7 +419,7 @@ def make_curation_funnel_processor(
         # session, so every frame this epoch builds must live on
         # batch_df's session (see streaming/sessionize.py)
         session = batch_df.sparkSession
-        cur = _read_versioned(
+        cur = store.read_latest(
             session, store_root, _CUR_STORE_SCHEMA, before_epoch=epoch
         )
         prev_labels = cur.where(F.col("kind") == _K_LABEL).select(
@@ -431,7 +428,7 @@ def make_curation_funnel_processor(
         prev_bcnt = cur.where(F.col("kind") == _K_BCNT).select(
             "band", "key", F.col("n").alias("n_prev")
         )
-        docs_hist = read_kind_history(
+        docs_hist = store.read_history(
             session,
             store_root,
             _K_DOC,
@@ -439,7 +436,7 @@ def make_curation_funnel_processor(
             ("doc_id", "source", "n_tokens", "tokens"),
             before_epoch=epoch,
         )
-        bands_hist = read_kind_history(
+        bands_hist = store.read_history(
             session,
             store_root,
             _K_BAND,
@@ -584,7 +581,7 @@ def make_curation_funnel_processor(
                     # prefix) — one extra bounded collect, only on
                     # the rare crossing epochs
                     eh_tbl = (
-                        read_kind_history(
+                        store.read_history(
                             session,
                             store_root,
                             _K_EDGE,
@@ -630,7 +627,7 @@ def make_curation_funnel_processor(
                         stats.get("closure_fallbacks", 0) + 1
                     )
                 if crossed > 0:
-                    edge_hist = read_kind_history(
+                    edge_hist = store.read_history(
                         session,
                         store_root,
                         _K_EDGE,
@@ -700,15 +697,10 @@ def make_curation_funnel_processor(
                 kp=kp,
             )
             # non-empty by construction: kind=raw has >= 1 row for any
-            # non-empty batch. static overwrite pinned for retry
-            # idempotence (see sessionize.make_sessionize_processor).
-            unified.write.option(
-                "partitionOverwriteMode", "static"
-            ).partitionBy("kind").mode("overwrite").parquet(
-                f"{store_root}/v{epoch}"
-            )
+            # non-empty batch
+            store.write_version(unified, store_root, epoch)
             t = _clock("t_write", t)
-            _prune_store_versions(
+            store.prune_versions(
                 session,
                 store_root,
                 current_epoch=epoch,
@@ -718,20 +710,13 @@ def make_curation_funnel_processor(
             # write action above; the store's kind=label partition is
             # now the durable copy, so the scratch dir goes. A crash
             # before this delete just leaves a dir the next epoch's
-            # spill overwrites — readers never see it (_state_versions
+            # spill overwrites — readers never see it (store.versions
             # matches only v<digits> dirs).
-            from hha_spark.sources import fs as _fs
-
-            _fs.delete(session, f"{store_root}/spill")
+            fs.delete(session, f"{store_root}/spill")
             t = _clock("t_prune", t)
             if compact_every and (epoch + 1) % compact_every == 0:
-                from hha_spark.streaming.store import (
-                    CURATION_HISTORY,
-                    compact_store,
-                )
-
-                folded = compact_store(
-                    session, store_root, history_kinds=CURATION_HISTORY
+                folded = store.compact_store(
+                    session, store_root, history_kinds=store.CURATION_HISTORY
                 )["folded"]
                 if stats is not None and folded:
                     stats["compactions"] = stats.get("compactions", 0) + 1
@@ -745,47 +730,6 @@ def make_curation_funnel_processor(
                 f.unpersist()
 
     return process
-
-
-def run_streaming_curation(
-    spark: SparkSession,
-    *,
-    data_root: str,
-    schema,
-    store_root: str,
-    checkpoint: str,
-    max_bucket: int | None = None,
-    max_files_per_trigger: int = 1,
-    available_now: bool = True,
-    stats: dict | None = None,
-    compact_every: int | None = None,
-    label_spill_rows: int | None = None,
-):
-    """File source -> foreachBatch(incremental curation funnel).
-    Returns the StreamingQuery. Heals any crashed store compaction
-    before the stream starts (streaming/store.py protocol contract:
-    recovery must precede the first store read after a restart)."""
-    from hha_spark.streaming.store import recover_compaction
-
-    recover_compaction(spark, store_root)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(data_root)
-    )
-    writer = stream.writeStream.foreachBatch(
-        make_curation_funnel_processor(
-            spark,
-            store_root=store_root,
-            max_bucket=max_bucket,
-            stats=stats,
-            compact_every=compact_every,
-            label_spill_rows=label_spill_rows,
-        )
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def final_curation_funnel(
@@ -814,9 +758,9 @@ def final_curation_funnel(
         budget_frac_pct = DEFAULT_BUDGET_PCT
     if salt is None:
         salt = DEFAULT_FILL_SALT
-    cur = _read_versioned(spark, store_root, _CUR_STORE_SCHEMA)
+    cur = store.read_latest(spark, store_root, _CUR_STORE_SCHEMA)
     labels = cur.where(F.col("kind") == _K_LABEL).select("doc_id", "label")
-    feats = read_kind_history(
+    feats = store.read_history(
         spark,
         store_root,
         _K_DOC,
@@ -829,7 +773,7 @@ def final_curation_funnel(
         unique, budget_frac_pct=budget_frac_pct, salt=salt
     )
     raw_stats = (
-        read_kind_history(
+        store.read_history(
             spark, store_root, _K_RAW, _RAW_SCHEMA, ("source", "n")
         )
         .groupBy("source")

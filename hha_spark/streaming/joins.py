@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hha_spark.functions.local import sql_over_views
+from hha_spark.streaming import store
 
 
 def attribution_join(
@@ -177,11 +178,9 @@ def make_disorder_attribution_processor(
     """Per-micro-batch body (see block comment above for the
     exactly-once argument). Per-epoch actions: one tiny max aggregate
     (doubles as the empty probe and materializes the cached event
-    union) and ONE kind-partitioned write."""
-    from hha_spark.streaming.sessionize import (
-        _prune_store_versions,
-        _read_versioned,
-    )
+    union) and ONE kind-partitioned write. Building the processor
+    heals any crashed store compaction first (streaming/store.py)."""
+    store.recover_compaction(spark, store_root)
 
     def process(batch_df, epoch_id: int) -> None:
         epoch = int(epoch_id)
@@ -190,10 +189,10 @@ def make_disorder_attribution_processor(
         # substitution registers temp views in each frame's OWN
         # session — everything here must stay on that clone
         session = batch_df.sparkSession
-        store = _read_versioned(
+        cur = store.read_latest(
             session, store_root, _ATTR_STORE_SCHEMA, before_epoch=epoch
         )
-        buf = store.where(F.col("kind") == _K_BUF).select(
+        buf = cur.where(F.col("kind") == _K_BUF).select(
             "user_id", "ts_s", "etype"
         )
         all_ev = (
@@ -212,7 +211,7 @@ def make_disorder_attribution_processor(
             unified = sql_over_views(
                 session,
                 _ATTR_EPOCH_SQL,
-                frames={"ev": all_ev, "store": store},
+                frames={"ev": all_ev, "store": cur},
                 wm=wm,
                 max_delay=max_delay_sec,
             )
@@ -221,14 +220,8 @@ def make_disorder_attribution_processor(
             # immature — kind=buf always exists, for ANY
             # disorder_sec >= 0 (the strict maturity bound is what
             # makes the zero-disorder configuration safe too)
-            # static overwrite pinned for retry idempotence (see
-            # sessionize.make_sessionize_processor's write)
-            unified.write.option(
-                "partitionOverwriteMode", "static"
-            ).partitionBy("kind").mode("overwrite").parquet(
-                f"{store_root}/v{epoch}"
-            )
-            _prune_store_versions(
+            store.write_version(unified, store_root, epoch)
+            store.prune_versions(
                 session,
                 store_root,
                 current_epoch=epoch,
@@ -240,42 +233,6 @@ def make_disorder_attribution_processor(
     return process
 
 
-def run_disorder_attribution(
-    spark,
-    *,
-    data_root: str,
-    schema,
-    store_root: str,
-    checkpoint: str,
-    max_delay_sec: int,
-    disorder_sec: int,
-    max_files_per_trigger: int = 1,
-    available_now: bool = True,
-):
-    """File source -> foreachBatch(bounded-disorder attribution).
-    Returns the StreamingQuery. Heals any crashed store compaction
-    first (streaming/store.py recovery contract)."""
-    from hha_spark.streaming.store import recover_compaction
-
-    recover_compaction(spark, store_root)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(data_root)
-    )
-    writer = stream.writeStream.foreachBatch(
-        make_disorder_attribution_processor(
-            spark,
-            store_root=store_root,
-            max_delay_sec=max_delay_sec,
-            disorder_sec=disorder_sec,
-        )
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def final_attributions(
     spark, *, store_root: str, max_delay_sec: int
 ):
@@ -285,22 +242,17 @@ def final_attributions(
     click has click_ts + max_delay below the watermark, and every
     buffered purchase is above it). Returns every attributed pair:
     (user_id, ts_s=click_ts, ts2_s=purchase_ts)."""
-    from hha_spark.streaming.sessionize import (
-        _read_versioned,
-        read_kind_history,
-    )
-
     # one fused statement (_ATTR_FLUSH_SQL): the buffered-purchase x
     # (state + buffered clicks) interval join as a single analysis
     tail = sql_over_views(
         spark,
         _ATTR_FLUSH_SQL,
         frames={
-            "store": _read_versioned(spark, store_root, _ATTR_STORE_SCHEMA)
+            "store": store.read_latest(spark, store_root, _ATTR_STORE_SCHEMA)
         },
         max_delay=max_delay_sec,
     )
-    emitted = read_kind_history(
+    emitted = store.read_history(
         spark,
         store_root,
         _K_ATTR,

@@ -73,7 +73,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hha_spark.functions.local import sql_over_views
-from hha_spark.sources import fs
+from hha_spark.streaming import store
 
 SESSION_COLS = ("user_id", "start_us", "end_us", "n_events")
 _SESSION_SCHEMA = "user_id long, start_us long, end_us long, n_events long"
@@ -328,56 +328,6 @@ SELECT user_id, start_us, end_us, n_events FROM _merged
 )
 
 
-def _state_versions(spark: SparkSession, state_root: str) -> list[int]:
-    return sorted(
-        int(d[1:])
-        for d in fs.listdir(spark, state_root)
-        if d.startswith("v") and d[1:].isdigit()
-    )
-
-
-# schema DDL -> rendered typed-null projection, so repeated pre-first-
-# write reads don't re-parse the (module-constant) schema per epoch
-_EMPTY_SELECTS: dict[str, str] = {}
-
-
-def _empty_frame(spark: SparkSession, schema: str) -> DataFrame:
-    """Zero-row frame with `schema` as a pure-JVM LocalRelation
-    (plans as `LocalTableScan <empty>`), replacing
-    ``spark.createDataFrame([], schema)`` on the pre-first-write read
-    paths. The createDataFrame route builds a defaultParallelism-
-    partition PYTHON RDD: every job that scans it launches ~one
-    zero-row Python worker task per core (measured ~0.5 s of pure
-    worker wait per task, re-paid on every re-execution of the
-    epoch-0 probe — 32-34-task stages with ~17 s of executor time
-    and ~0.3 s of CPU), and, being opaque to Catalyst, it blocks
-    PropagateEmptyRelation from pruning the empty prev-state
-    branches out of the first epoch's plan. A LocalRelation costs
-    zero tasks and folds away at optimize time. (Schema strings here
-    are module constants, never user input.)"""
-    sel = _EMPTY_SELECTS.get(schema)
-    if sel is None:
-        from pyspark.sql.types import StructType
-
-        fields = StructType.fromDDL(schema).fields
-        # invariant of the string-SQL rendering (ADVICE r11): a
-        # backticked name would break the generated SELECT and a NOT
-        # NULL field would silently come back nullable — all call
-        # sites are module-constant schemas with neither feature
-        for f in fields:
-            if "`" in f.name or not f.nullable:
-                raise ValueError(
-                    "_empty_frame requires nullable, backtick-free "
-                    f"fields; got {f.name!r} in {schema!r}"
-                )
-        sel = ", ".join(
-            f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
-            for f in fields
-        )
-        _EMPTY_SELECTS[schema] = sel
-    return spark.sql(f"SELECT {sel} WHERE false")
-
-
 def read_open_state(
     spark: SparkSession, store_root: str, *, before_epoch: int | None = None
 ) -> DataFrame:
@@ -393,58 +343,13 @@ def read_open_state(
     contains it would double-count n_events. Final readers pass no
     bound and get the newest complete version.
     """
-    store = _read_versioned(
-        spark, store_root, _STORE_SCHEMA, before_epoch=before_epoch
+    return (
+        store.read_latest(
+            spark, store_root, _STORE_SCHEMA, before_epoch=before_epoch
+        )
+        .where(F.col("kind") == _KIND_OPEN)
+        .select(*SESSION_COLS)
     )
-    return store.where(F.col("kind") == _KIND_OPEN).select(*SESSION_COLS)
-
-
-def _heal_staged_fold(spark: SparkSession, root: str) -> None:
-    """Roll forward a compaction that crashed between staging
-    completion and the directory swap, so EVERY store read — not just
-    a restarting stream's startup recovery — sees the folded history.
-
-    Without this, a consumer that goes straight to a final flush
-    (final_curation_funnel / final_attributions /
-    read_closed_sessions) after compact_store died between its
-    delete and rename steps would silently read a store whose folded
-    history exists only in _compact.staging (underscore dirs are
-    invisible to _state_versions) — wrong results, no error.
-
-    Only a COMPLETE staging (marker present) is acted on: marker
-    presence proves the folded dirs' contents are fully merged in
-    staging, so finishing the deletes+rename is idempotent and
-    read-equivalent. Staging WITHOUT a marker is left alone — it is
-    either junk from a crash mid-build (the next compact_store
-    discards it; it is invisible to readers anyway) or a live
-    maintenance writer mid-fold, which a reader must not race.
-    Cost on the happy path: one fs.exists probe per read."""
-    from hha_spark.streaming import store as _store  # lazy: store imports us
-
-    marker = f"{root}/{_store._STAGING}/{_store._MARKER}"
-    if fs.exists(spark, marker):
-        _store.recover_compaction(spark, root)
-
-
-def _read_versioned(
-    spark: SparkSession,
-    root: str,
-    schema: str,
-    *,
-    before_epoch: int | None = None,
-) -> DataFrame:
-    """Newest epoch-keyed version under `root` (same idempotency
-    semantics as read_open_state); empty frame with `schema` before
-    the first write."""
-    _heal_staged_fold(spark, root)
-    versions = _state_versions(spark, root)
-    if before_epoch is not None:
-        versions = [v for v in versions if v < before_epoch]
-    if not versions:
-        return _empty_frame(spark, schema)
-    # explicit schema (incl. the kind partition column, matched by
-    # name) skips per-read footer inference — see read_kind_history
-    return spark.read.schema(schema).parquet(f"{root}/v{versions[-1]}")
 
 
 def make_sessionize_processor(
@@ -472,7 +377,10 @@ def make_sessionize_processor(
     epoch's true pre-state (the newest version strictly below this
     epoch, see read_open_state), so a redelivered epoch rewrites the
     same bytes instead of duplicating rows — effectively-exactly-once
-    on top of the file source's at-least-once replay."""
+    on top of the file source's at-least-once replay. Building the
+    processor heals any crashed store compaction first
+    (streaming/store.py: recovery precedes the first store read)."""
+    store.recover_compaction(spark, store_root)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         epoch = int(epoch_id)
@@ -497,59 +405,16 @@ def make_sessionize_processor(
             gap_us=gap_us,
         )
         # non-empty by construction: a non-empty batch leaves every
-        # active user exactly one kind=open row.
-        # partitionOverwriteMode pinned static: retry idempotence
-        # needs the whole v{epoch} dir truncated, not just the
-        # partitions the retry happens to produce (a session
-        # configured dynamic would keep a failed attempt's stale
-        # kind= dirs when the retry's partition set differs).
-        tagged.write.option(
-            "partitionOverwriteMode", "static"
-        ).partitionBy("kind").mode("overwrite").parquet(
-            f"{store_root}/v{epoch}"
+        # active user exactly one kind=open row
+        store.write_version(tagged, store_root, epoch)
+        store.prune_versions(
+            session,
+            store_root,
+            current_epoch=epoch,
+            prune_kinds=(_KIND_OPEN, _KIND_BUF),
         )
-        _prune_store_versions(session, store_root, current_epoch=epoch)
 
     return process
-
-
-def run_streaming_sessionizer(
-    spark: SparkSession,
-    *,
-    data_root: str,
-    schema,
-    store_root: str,
-    checkpoint: str,
-    gap_us: int,
-    max_files_per_trigger: int = 1,
-    available_now: bool = True,
-):
-    """File source -> foreachBatch(stateful sessionizer).
-
-    maxFilesPerTrigger=1 makes each input file its own micro-batch
-    (the gate writes time-sliced files, so the replay exercises the
-    cross-batch state path for real). Returns the StreamingQuery.
-    Heals any crashed store compaction first (streaming/store.py:
-    recovery must precede the first store read after a restart).
-    """
-    from hha_spark.streaming.store import recover_compaction
-
-    recover_compaction(spark, store_root)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(data_root)
-    )
-    writer = stream.writeStream.foreachBatch(
-        make_sessionize_processor(
-            spark,
-            store_root=store_root,
-            gap_us=gap_us,
-        )
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def final_sessions(
@@ -579,15 +444,6 @@ _KIND_BUF = "buf"
 _KIND_CLOSED = "closed"
 
 
-def _split_store(store: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(open sessions, buffered events) from one unified store read."""
-    opens = store.where(F.col("kind") == _KIND_OPEN).select(*SESSION_COLS)
-    buf = store.where(F.col("kind") == _KIND_BUF).select(
-        "user_id", F.col("start_us").alias("ts_us")
-    )
-    return opens, buf
-
-
 def _as_intervals(events: DataFrame) -> DataFrame:
     """Events as degenerate one-event session intervals
     (start=end=ts, n_events=1). Gap-merging degenerate intervals IS
@@ -611,67 +467,12 @@ def _as_intervals(events: DataFrame) -> DataFrame:
     )
 
 
-def read_kind_history(
-    spark: SparkSession,
-    store_root: str,
-    kind: str,
-    schema: str,
-    cols: tuple[str, ...],
-    *,
-    before_epoch: int | None = None,
-) -> DataFrame:
-    """Union of one kind's partition across ALL store versions —
-    the append-only-history read (pruning preserves these kinds).
-    Shared by the sessionize stores (kind=closed), the disorder
-    attribution store (kind=attr, streaming/joins.py), and the
-    curation store (streaming/curation_stream.py). `before_epoch`
-    bounds the read to versions strictly below an epoch — REQUIRED
-    when a processor reads history mid-stream (retry idempotence: a
-    redelivered epoch must not see its own failed attempt's rows);
-    final readers pass no bound."""
-    _heal_staged_fold(spark, store_root)
-    versions = _state_versions(spark, store_root)
-    if before_epoch is not None:
-        versions = [v for v in versions if v < before_epoch]
-    dirs = [
-        d
-        for d in (f"{store_root}/v{v}/kind={kind}" for v in versions)
-        if fs.exists(spark, d)
-    ]
-    if not dirs:
-        return _empty_frame(spark, schema)
-    # explicit schema: every stub of a kind is written with one fixed
-    # schema, so footer-sniffing schema inference across N version
-    # dirs is pure latency (one footer read per dir per history read)
-    return spark.read.schema(schema).parquet(*dirs).select(*cols)
-
-
 def read_closed_sessions(spark: SparkSession, store_root: str) -> DataFrame:
     """Union of every epoch's closed partition (all store versions —
     pruning preserves kind=closed)."""
-    return read_kind_history(
+    return store.read_history(
         spark, store_root, _KIND_CLOSED, _SESSION_SCHEMA, SESSION_COLS
     )
-
-
-def _prune_store_versions(
-    spark: SparkSession,
-    store_root: str,
-    *,
-    current_epoch: int,
-    prune_kinds: tuple[str, ...] = ("open", "buf"),
-) -> None:
-    """_keep_latest_versions, store flavor: stale versions lose only
-    their carried-state partitions (`prune_kinds`); the remaining
-    kinds are append-only history the final flush reads, so every
-    version directory survives as a (possibly history-only) stub."""
-    versions = _state_versions(spark, store_root)
-    prev = [v for v in versions if v < current_epoch]
-    keep = {current_epoch} | set(prev[-1:])
-    for v in versions:
-        if v not in keep:
-            for kind in prune_kinds:
-                fs.delete(spark, f"{store_root}/v{v}/kind={kind}")
 
 
 def make_disorder_sessionize_processor(
@@ -719,21 +520,27 @@ def make_disorder_sessionize_processor(
     contract — use make_sessionize_processor. (The attribution join
     handles 0 via its strict maturity bound; this processor's bound
     is inclusive and does not.)
+
+    Building the processor heals any crashed store compaction first
+    (see make_sessionize_processor).
     """
     if disorder_us <= 0:
         raise ValueError(
             "disorder_us must be > 0; use make_sessionize_processor "
             "for ordered (zero-disorder) delivery"
         )
+    store.recover_compaction(spark, store_root)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         epoch = int(epoch_id)
         # per-batch clone session: see make_sessionize_processor
         session = batch_df.sparkSession
-        store = _read_versioned(
+        cur = store.read_latest(
             session, store_root, _STORE_SCHEMA, before_epoch=epoch
         )
-        _, buf = _split_store(store)
+        buf = cur.where(F.col("kind") == _KIND_BUF).select(
+            "user_id", F.col("start_us").alias("ts_us")
+        )
         all_ev = (
             batch_df.select("user_id", "ts_us").unionByName(buf).persist()
         )
@@ -751,60 +558,23 @@ def make_disorder_sessionize_processor(
             unified = sql_over_views(
                 session,
                 _DISORDER_EPOCH_SQL,
-                frames={"store": store, "ev": all_ev},
+                frames={"store": cur, "ev": all_ev},
                 wm=wm,
                 gap_us=gap_us,
             )
             # non-empty by construction: the max event is always
-            # immature (disorder_us > 0), so kind=buf always exists.
-            # static overwrite pinned for retry idempotence (see
-            # make_sessionize_processor's write).
-            unified.write.option(
-                "partitionOverwriteMode", "static"
-            ).partitionBy("kind").mode("overwrite").parquet(
-                f"{store_root}/v{epoch}"
+            # immature (disorder_us > 0), so kind=buf always exists
+            store.write_version(unified, store_root, epoch)
+            store.prune_versions(
+                session,
+                store_root,
+                current_epoch=epoch,
+                prune_kinds=(_KIND_OPEN, _KIND_BUF),
             )
-            _prune_store_versions(session, store_root, current_epoch=epoch)
         finally:
             all_ev.unpersist()
 
     return process
-
-
-def run_disorder_sessionizer(
-    spark: SparkSession,
-    *,
-    data_root: str,
-    schema,
-    store_root: str,
-    checkpoint: str,
-    gap_us: int,
-    disorder_us: int,
-    max_files_per_trigger: int = 1,
-    available_now: bool = True,
-):
-    """File source -> foreachBatch(bounded-disorder sessionizer).
-    Returns the StreamingQuery. Heals any crashed store compaction
-    first (streaming/store.py recovery contract)."""
-    from hha_spark.streaming.store import recover_compaction
-
-    recover_compaction(spark, store_root)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(data_root)
-    )
-    writer = stream.writeStream.foreachBatch(
-        make_disorder_sessionize_processor(
-            spark,
-            store_root=store_root,
-            gap_us=gap_us,
-            disorder_us=disorder_us,
-        )
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def final_sessions_disorder(
@@ -821,7 +591,9 @@ def final_sessions_disorder(
     tail = sql_over_views(
         spark,
         _DISORDER_FLUSH_SQL,
-        frames={"store": _read_versioned(spark, store_root, _STORE_SCHEMA)},
+        frames={
+            "store": store.read_latest(spark, store_root, _STORE_SCHEMA)
+        },
         gap_us=gap_us,
     )
     return read_closed_sessions(spark, store_root).unionByName(tail)

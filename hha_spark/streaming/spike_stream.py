@@ -57,6 +57,7 @@ from hha_spark.sources.histograms import (
     read_window,
     write_partitioned,
 )
+from hha_spark.streaming.runner import start_file_stream
 
 # the reference's prev window is physically bounded by its two hourly
 # input files (hha.py:147,293-297)
@@ -173,26 +174,27 @@ def run_streaming_detector(
     driver-gate replay mode; mutually exclusive with `trigger_sec`).
     Returns the StreamingQuery.
     """
-    p = params or DetectorParams()
-    stream = (
-        spark.readStream.schema(HISTOGRAM_SCHEMA)
-        .option("maxFilesPerTrigger", "256")
-        .parquet(data_root)
-    )
-    writer = stream.writeStream.foreachBatch(
-        make_batch_processor(
+    if available_now:
+        trigger = ("availableNow", True)
+    elif trigger_sec:
+        trigger = ("processingTime", f"{trigger_sec} seconds")
+    else:
+        trigger = None
+    return start_file_stream(
+        spark,
+        data_root=data_root,
+        schema=HISTOGRAM_SCHEMA,
+        process=make_batch_processor(
             spark,
             samples_root=samples_root,
             alerts_path=alerts_path,
-            params=p,
+            params=params or DetectorParams(),
             zones=zones,
             now_fn=now_fn,
             retention_sec=retention_sec,
             on_rules=on_rules,
-        )
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_sec:
-        writer = writer.trigger(processingTime=f"{trigger_sec} seconds")
-    return writer.start()
+        ),
+        checkpoint=checkpoint,
+        max_files_per_trigger=256,
+        trigger=trigger,
+    )

@@ -1,22 +1,36 @@
-"""Maintenance for the versioned kind-partitioned stores — history
-compaction.
+"""The versioned kind-partitioned store behind every store-backed
+streaming processor (streaming/sessionize.py, streaming/joins.py,
+streaming/curation_stream.py), and its history compaction.
 
-Every streaming processor in this engine (streaming/sessionize.py,
-streaming/joins.py, streaming/curation_stream.py) writes ONE
-epoch-keyed version directory per micro-batch: carried state lives
-only in the newest version (and, for retry idempotence, the one
-below it — _prune_store_versions deletes state kinds everywhere
-else), while append-only HISTORY kinds (closed sessions, attribution
-pairs, curation docs/bands/edges/raw) survive in every version as
-history-only stubs that `read_kind_history` unions at read time.
+Layout: one epoch-keyed version directory per micro-batch,
+``{root}/v{epoch}/kind=<k>/``. Carried state lives only in the newest
+version (and, for retry idempotence, the one below it); append-only
+HISTORY kinds (closed sessions, attribution pairs, curation
+docs/bands/edges/raw) survive in every version as history-only stubs.
 
-That union is O(number of epochs) directory listings and parquet
-footer reads. At gate scale (2-3 epochs) it is invisible; on a real
-deployment a stream that commits an epoch every few seconds produces
-tens of thousands of version stubs per day, and every mid-stream
-history read (the curation funnel's candidate verification, the
-final flushes) pays the whole listing tail. Object stores make it
-worse: LIST calls are metered and rate-limited.
+Public API:
+  * ``versions(spark, root)`` — the sorted epoch numbers present.
+  * ``read_latest(spark, root, schema, *, before_epoch=None)`` — the
+    newest version strictly below ``before_epoch`` (a processor's true
+    pre-state, so a redelivered epoch ignores its own failed attempt);
+    an empty frame before the first write.
+  * ``read_history(spark, root, kind, schema, cols, *,
+    before_epoch=None)`` — one kind unioned across every version.
+  * ``write_version(frame, root, epoch)`` — the epoch's one
+    kind-partitioned static overwrite.
+  * ``prune_versions(spark, root, *, current_epoch, prune_kinds)`` —
+    drops carried-state kinds everywhere but the newest two versions.
+  * ``empty_frame(spark, schema)`` — the zero-task empty frame the
+    readers return before the first write.
+  * ``compact_store`` / ``recover_compaction`` — below.
+
+The history union is O(number of epochs) directory listings and
+parquet footer reads. At gate scale (2-3 epochs) it is invisible; on a
+real deployment a stream that commits an epoch every few seconds
+produces tens of thousands of version stubs per day, and every
+mid-stream history read (the curation funnel's candidate
+verification, the final flushes) pays the whole listing tail. Object
+stores make it worse: LIST calls are metered and rate-limited.
 
 `compact_store` bounds that growth: it folds history stubs strictly
 below the two newest versions into merged base directories. Minor
@@ -58,14 +72,16 @@ protocol —
 without marker is discarded (nothing was deleted yet); staging with
 marker is rolled FORWARD (finish the deletes, finish the rename).
 `compact_store` begins by recovering, so a crashed compaction heals
-on the next maintenance run; a stream restarting earlier must
-recover FIRST, before its initial store read — every run_* runner in
-this repo does so at start. The marker file rides
-into the merged dir as an underscore-prefixed file, which parquet
-readers ignore, and doubles as compaction provenance.
+on the next maintenance run. A restarting stream recovers when its
+processor is BUILT: every store-backed ``make_*_processor`` factory
+calls `recover_compaction` before returning, so recovery precedes the
+first store read. Every read also rolls a complete staged fold
+forward (`_heal_staged_fold`). The marker file rides into the merged
+dir as an underscore-prefixed file, which parquet readers ignore, and
+doubles as compaction provenance.
 
-The staging/marker names start with '_' so `_state_versions`
-(v<int> dirs only) and Spark's file index both ignore them.
+The staging/marker names start with '_' so `versions` (v<int> dirs
+only) and Spark's file index both ignore them.
 """
 
 from __future__ import annotations
@@ -73,20 +89,187 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from hha_spark.sources import fs
-from hha_spark.streaming.sessionize import _state_versions
 
 _STAGING = "_compact.staging"
 _MARKER = "_COMPACTED"
 
 # history kinds per store flavor (the processors' append-only kinds;
 # everything else is carried state, pruned to the newest two versions
-# by _prune_store_versions and never folded)
+# by prune_versions and never folded)
 SESSIONIZE_HISTORY = ("closed",)
 ATTRIBUTION_HISTORY = ("attr",)
 CURATION_HISTORY = ("doc", "band", "edge", "raw")
+
+
+def versions(spark: SparkSession, root: str) -> list[int]:
+    """Sorted epoch numbers of the v<epoch> directories under `root`."""
+    return sorted(
+        int(d[1:])
+        for d in fs.listdir(spark, root)
+        if d.startswith("v") and d[1:].isdigit()
+    )
+
+
+# schema DDL -> rendered typed-null projection, so repeated pre-first-
+# write reads don't re-parse the (module-constant) schema per epoch
+_EMPTY_SELECTS: dict[str, str] = {}
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """Zero-row frame with `schema` as a pure-JVM LocalRelation
+    (plans as `LocalTableScan <empty>`), replacing
+    ``spark.createDataFrame([], schema)`` on the pre-first-write read
+    paths. The createDataFrame route builds a defaultParallelism-
+    partition PYTHON RDD: every job that scans it launches ~one
+    zero-row Python worker task per core (measured ~0.5 s of pure
+    worker wait per task, re-paid on every re-execution of the
+    epoch-0 probe — 32-34-task stages with ~17 s of executor time
+    and ~0.3 s of CPU), and, being opaque to Catalyst, it blocks
+    PropagateEmptyRelation from pruning the empty prev-state
+    branches out of the first epoch's plan. A LocalRelation costs
+    zero tasks and folds away at optimize time. (Schema strings here
+    are module constants, never user input.)"""
+    sel = _EMPTY_SELECTS.get(schema)
+    if sel is None:
+        fields = StructType.fromDDL(schema).fields
+        # invariant of the string-SQL rendering: a backticked name
+        # would break the generated SELECT and a NOT NULL field would
+        # silently come back nullable — all call sites are
+        # module-constant schemas with neither feature
+        for f in fields:
+            if "`" in f.name or not f.nullable:
+                raise ValueError(
+                    "empty_frame requires nullable, backtick-free "
+                    f"fields; got {f.name!r} in {schema!r}"
+                )
+        sel = ", ".join(
+            f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
+            for f in fields
+        )
+        _EMPTY_SELECTS[schema] = sel
+    return spark.sql(f"SELECT {sel} WHERE false")
+
+
+def _heal_staged_fold(spark: SparkSession, root: str) -> None:
+    """Roll forward a compaction that crashed between staging
+    completion and the directory swap, so EVERY store read — not just
+    a restarting stream's processor-build recovery — sees the folded
+    history.
+
+    Without this, a consumer that goes straight to a final flush
+    (final_curation_funnel / final_attributions /
+    read_closed_sessions) after compact_store died between its
+    delete and rename steps would silently read a store whose folded
+    history exists only in _compact.staging (underscore dirs are
+    invisible to `versions`) — wrong results, no error.
+
+    Only a COMPLETE staging (marker present) is acted on: marker
+    presence proves the folded dirs' contents are fully merged in
+    staging, so finishing the deletes+rename is idempotent and
+    read-equivalent. Staging WITHOUT a marker is left alone — it is
+    either junk from a crash mid-build (the next compact_store
+    discards it; it is invisible to readers anyway) or a live
+    maintenance writer mid-fold, which a reader must not race.
+    Cost on the happy path: one fs.exists probe per read."""
+    if fs.exists(spark, f"{root}/{_STAGING}/{_MARKER}"):
+        recover_compaction(spark, root)
+
+
+def read_latest(
+    spark: SparkSession,
+    root: str,
+    schema: str,
+    *,
+    before_epoch: int | None = None,
+) -> DataFrame:
+    """Newest epoch-keyed version under `root`; empty frame with
+    `schema` before the first write.
+
+    Versions are EPOCH-KEYED (v<epoch_id>), which is what makes the
+    processors idempotent under foreachBatch retries: a redelivered
+    epoch N passes before_epoch=N and reads the newest version
+    STRICTLY BELOW N (its true pre-state — any v<N> left by the
+    failed attempt is ignored and overwritten), recomputes the
+    identical epoch, and re-commits. Final readers pass no bound and
+    get the newest complete version."""
+    _heal_staged_fold(spark, root)
+    vs = versions(spark, root)
+    if before_epoch is not None:
+        vs = [v for v in vs if v < before_epoch]
+    if not vs:
+        return empty_frame(spark, schema)
+    # explicit schema (incl. the kind partition column, matched by
+    # name) skips per-read footer inference — see read_history
+    return spark.read.schema(schema).parquet(f"{root}/v{vs[-1]}")
+
+
+def read_history(
+    spark: SparkSession,
+    root: str,
+    kind: str,
+    schema: str,
+    cols: tuple[str, ...],
+    *,
+    before_epoch: int | None = None,
+) -> DataFrame:
+    """Union of one kind's partition across ALL store versions — the
+    append-only-history read (pruning preserves these kinds).
+    `before_epoch` bounds the read to versions strictly below an
+    epoch — REQUIRED when a processor reads history mid-stream (retry
+    idempotence: a redelivered epoch must not see its own failed
+    attempt's rows); final readers pass no bound."""
+    _heal_staged_fold(spark, root)
+    vs = versions(spark, root)
+    if before_epoch is not None:
+        vs = [v for v in vs if v < before_epoch]
+    dirs = [
+        d
+        for d in (f"{root}/v{v}/kind={kind}" for v in vs)
+        if fs.exists(spark, d)
+    ]
+    if not dirs:
+        return empty_frame(spark, schema)
+    # explicit schema: every stub of a kind is written with one fixed
+    # schema, so footer-sniffing schema inference across N version
+    # dirs is pure latency (one footer read per dir per history read)
+    return spark.read.schema(schema).parquet(*dirs).select(*cols)
+
+
+def write_version(frame: DataFrame, root: str, epoch: int) -> None:
+    """Write one epoch's store version: `frame` (with a `kind` column)
+    partitioned by kind into {root}/v{epoch}, overwriting.
+    partitionOverwriteMode is pinned static: retry idempotence needs
+    the whole version dir truncated, not just the partitions the retry
+    happens to produce (a session configured dynamic would keep a
+    failed attempt's stale kind= dirs when the retry's partition set
+    differs)."""
+    frame.write.option("partitionOverwriteMode", "static").partitionBy(
+        "kind"
+    ).mode("overwrite").parquet(f"{root}/v{epoch}")
+
+
+def prune_versions(
+    spark: SparkSession,
+    root: str,
+    *,
+    current_epoch: int,
+    prune_kinds: tuple[str, ...],
+) -> None:
+    """Drop the carried-state partitions (`prune_kinds`) of every
+    version except `current_epoch` and the newest one below it (the
+    retry target's pre-state). The remaining kinds are append-only
+    history the final flush reads, so every version directory
+    survives as a (possibly history-only) stub."""
+    vs = versions(spark, root)
+    prev = [v for v in vs if v < current_epoch]
+    keep = {current_epoch, *prev[-1:]}
+    for v in vs:
+        if v not in keep:
+            for kind in prune_kinds:
+                fs.delete(spark, f"{root}/v{v}/kind={kind}")
 
 
 def _kind_dirs(spark: SparkSession, root: str, version: int) -> list[str]:
@@ -122,7 +305,7 @@ def recover_compaction(spark: SparkSession, store_root: str) -> str:
         # completed, so no deletes ran and the staging is safely
         # discardable (deletes only start after the marker rename
         # returns). Raising here instead would propagate out of every
-        # run_* runner's startup recovery and wedge ALL restarts —
+        # processor's build-time recovery and wedge ALL restarts —
         # the exact failure the torn-marker handling exists to stop.
         fs.delete(spark, staging)
         return "discarded"
@@ -209,8 +392,7 @@ def compact_store(
     if mode not in ("minor", "major"):
         raise ValueError(f"unknown compaction mode {mode!r}")
     recover_compaction(spark, store_root)
-    versions = _state_versions(spark, store_root)
-    olds = versions[:-2]
+    olds = versions(spark, store_root)[:-2]
     if mode == "minor":
         olds = [
             v

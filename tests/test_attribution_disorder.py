@@ -15,8 +15,9 @@ import time
 from hha_spark.streaming.joins import (
     final_attributions,
     make_disorder_attribution_processor,
-    run_disorder_attribution,
 )
+from hha_spark.streaming.runner import start_file_stream
+from hha_spark.streaming.store import read_history, read_latest
 
 D = 100   # max click->purchase delay
 W = 200   # disorder bound
@@ -69,16 +70,15 @@ def _write_files(spark, tmp_path) -> str:
 
 def _run(spark, tmp_path, *, disorder_sec=W):
     store = str(tmp_path / f"store_w{disorder_sec}")
-    q = run_disorder_attribution(
+    start_file_stream(
         spark,
         data_root=_write_files(spark, tmp_path),
         schema=SCHEMA,
-        store_root=store,
+        process=make_disorder_attribution_processor(
+            spark, store_root=store, max_delay_sec=D, disorder_sec=disorder_sec
+        ),
         checkpoint=str(tmp_path / f"ckpt_w{disorder_sec}"),
-        max_delay_sec=D,
-        disorder_sec=disorder_sec,
-    )
-    q.awaitTermination()
+    ).awaitTermination()
     return store
 
 
@@ -100,17 +100,13 @@ def test_disorder_stream_equals_batch_join(spark, tmp_path):
         _ATTR_PAIR_SCHEMA,
         _ATTR_STORE_SCHEMA,
     )
-    from hha_spark.streaming.sessionize import (
-        _read_versioned,
-        read_kind_history,
-    )
 
-    emitted = read_kind_history(
+    emitted = read_history(
         spark, store, "attr", _ATTR_PAIR_SCHEMA, ("user_id", "ts_s", "ts2_s")
     )
     assert emitted.count() > 0
     assert (
-        _read_versioned(spark, store, _ATTR_STORE_SCHEMA)
+        read_latest(spark, store, _ATTR_STORE_SCHEMA)
         .where("kind = 'buf'")
         .count()
         > 0

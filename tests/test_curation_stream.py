@@ -21,12 +21,11 @@ from hha_spark.streaming.curation_stream import (
     _EDGE_SCHEMA,
     _K_EDGE,
     _K_LABEL,
-    _read_versioned,
     final_curation_funnel,
     make_curation_funnel_processor,
-    read_kind_history,
-    run_streaming_curation,
 )
+from hha_spark.streaming.runner import start_file_stream
+from hha_spark.streaming.store import read_history, read_latest
 
 SCHEMA = "doc_id long, source string, text string"
 
@@ -53,19 +52,21 @@ def _run_stream(
     spark, tmp_path, batches, *, max_bucket=None, stats=None,
     label_spill_rows=None,
 ):
-    in_dir = _write_batches(spark, tmp_path, batches)
-    q = run_streaming_curation(
+    store = str(tmp_path / "store")
+    start_file_stream(
         spark,
-        data_root=in_dir,
+        data_root=_write_batches(spark, tmp_path, batches),
         schema=SCHEMA,
-        store_root=str(tmp_path / "store"),
+        process=make_curation_funnel_processor(
+            spark,
+            store_root=store,
+            max_bucket=max_bucket,
+            stats=stats,
+            label_spill_rows=label_spill_rows,
+        ),
         checkpoint=str(tmp_path / "ckpt"),
-        max_bucket=max_bucket,
-        stats=stats,
-        label_spill_rows=label_spill_rows,
-    )
-    q.awaitTermination()
-    return str(tmp_path / "store")
+    ).awaitTermination()
+    return store
 
 
 def _rollup(df):
@@ -104,7 +105,7 @@ def test_stream_equals_batch_pipeline(spark, tmp_path):
     # could have produced these labels
     labels = {
         (r.doc_id, r.label)
-        for r in _read_versioned(spark, store, _CUR_STORE_SCHEMA)
+        for r in read_latest(spark, store, _CUR_STORE_SCHEMA)
         .where(F.col("kind") == _K_LABEL)
         .select("doc_id", "label")
         .collect()
@@ -144,7 +145,7 @@ def test_cross_batch_cluster_merge_retroactively_drops_keeper(
     assert streamed == batch
     labels = {
         (r.doc_id, r.label)
-        for r in _read_versioned(spark, store, _CUR_STORE_SCHEMA)
+        for r in read_latest(spark, store, _CUR_STORE_SCHEMA)
         .where(F.col("kind") == _K_LABEL)
         .select("doc_id", "label")
         .collect()
@@ -169,7 +170,7 @@ def test_cap_crossing_revokes_early_edges(spark, tmp_path):
     assert stats.get("recomputes", 0) >= 1
     # the revoked edge is physically in the epoch-0 history — the
     # scenario is not vacuous
-    edges = read_kind_history(
+    edges = read_history(
         spark, store, _K_EDGE, _EDGE_SCHEMA,
         ("doc_id", "doc_id_b", "band", "key"),
     ).collect()
@@ -185,7 +186,7 @@ def test_cap_crossing_revokes_early_edges(spark, tmp_path):
     )
     assert streamed == _rollup(final_curation_funnel(spark, store_root=single))
     labels = (
-        _read_versioned(spark, store, _CUR_STORE_SCHEMA)
+        read_latest(spark, store, _CUR_STORE_SCHEMA)
         .where(F.col("kind") == _K_LABEL)
         .count()
     )
@@ -254,54 +255,14 @@ def test_random_corpora_random_splits_match_batch(spark, tmp_path):
 
 def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     """A stopped-and-restarted stream (same checkpoint) must neither
-    reprocess consumed files nor break the funnel: run availableNow
-    over the first half of the corpus, terminate, land the second
-    half, restart — the flush equals the batch pipeline over the
-    whole corpus, and epoch numbering continues (distinct store
-    versions, no overwrite of committed epochs)."""
-    from hha_spark.caching import release_tracked
-    from hha_spark.queries.corpus import curation_funnel
-    from hha_spark.streaming.sessionize import _state_versions
+    reprocess consumed files nor break the funnel: the first query
+    drains the first two files and stops, the last file lands, a new
+    query resumes — committed epochs survive, exactly one epoch is
+    added, and the flush equals the batch pipeline over the whole
+    corpus (an exact dup in one half, its near dup in the other)."""
+    from test_stream_restart import check_restart, curation_funnel_case
 
-    rows = [
-        (1, "a", _doc_text(800)),
-        (2, "a", _doc_text(800)),            # exact dup, same half
-        (3, "b", _doc_text(800, mutate=1)),  # near dup, OTHER half
-        (4, "b", _doc_text(900)),
-        (5, "c", _doc_text(950)),
-    ]
-    in_dir = _write_batches(spark, tmp_path, [rows[:2], rows[2:4]])
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-
-    def _run():
-        q = run_streaming_curation(
-            spark,
-            data_root=in_dir,
-            schema=SCHEMA,
-            store_root=store,
-            checkpoint=ckpt,
-        )
-        q.awaitTermination()
-
-    _run()  # consumes the first two files, then terminates
-    v_first = _state_versions(spark, store)
-    release_tracked()
-    # second half lands after the shutdown
-    for i, batch in enumerate([[rows[4]]], start=2):
-        d = str(tmp_path / f"late{i}")
-        spark.createDataFrame(batch, SCHEMA).coalesce(1).write.parquet(d)
-        (part,) = glob.glob(f"{d}/part-*.parquet")
-        shutil.move(part, f"{in_dir}/batch{i}.parquet")
-    _run()  # restart on the same checkpoint
-    versions = _state_versions(spark, store)
-    # committed epochs were not reprocessed: old versions survive and
-    # the restart appended strictly newer epoch ids
-    assert versions[: len(v_first)] == v_first
-    assert len(versions) == len(v_first) + 1
-    streamed = _rollup(final_curation_funnel(spark, store_root=store))
-    batch_ref = _rollup(curation_funnel(spark.createDataFrame(rows, SCHEMA)))
-    assert streamed == batch_ref
+    check_restart(spark, tmp_path, curation_funnel_case())
 
 
 def test_epoch_retry_is_idempotent(spark, tmp_path):
@@ -356,7 +317,7 @@ def test_label_spill_threshold_cutover(spark, tmp_path):
 
 
 def test_label_spill_equals_batch(spark, tmp_path):
-    """Force the spill threshold to 0 (via the run_streaming_curation
+    """Force the spill threshold to 0 (via the processor's
     `label_spill_rows` parameter — the same plumbing the
     stream_curation_spilled gate uses) so EVERY epoch's
     driver-computed labels take the write-then-read-back spill
@@ -395,7 +356,7 @@ def test_label_spill_equals_batch(spark, tmp_path):
     # from batch 1 both resolve to keeper 1)
     labels = {
         (r.doc_id, r.label)
-        for r in _read_versioned(spark, store, _CUR_STORE_SCHEMA)
+        for r in read_latest(spark, store, _CUR_STORE_SCHEMA)
         .where(F.col("kind") == _K_LABEL)
         .select("doc_id", "label")
         .collect()
@@ -513,7 +474,7 @@ def test_over_envelope_fallback_on_crossing_epoch(spark, tmp_path, monkeypatch):
     batch_labels = {(d, find(d)) for d in edge_nodes}
     stream_labels = {
         (r.doc_id, r.label)
-        for r in _read_versioned(spark, store, _CUR_STORE_SCHEMA)
+        for r in read_latest(spark, store, _CUR_STORE_SCHEMA)
         .where(F.col("kind") == _K_LABEL)
         .select("doc_id", "label")
         .collect()

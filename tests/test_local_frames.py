@@ -9,11 +9,7 @@ with ~17 s of executor wait and ~0.3 s of CPU per probe)."""
 from __future__ import annotations
 
 from hha_spark.queries.streaming_gate import _local_rows
-from hha_spark.streaming.sessionize import (
-    _empty_frame,
-    _read_versioned,
-    read_kind_history,
-)
+from hha_spark.streaming.store import empty_frame, read_history, read_latest
 
 _SCHEMA = "doc_id long, tokens array<string>, kind string"
 
@@ -23,7 +19,7 @@ def _executed(df) -> str:
 
 
 def test_empty_frame_is_local_relation(spark):
-    df = _empty_frame(spark, _SCHEMA)
+    df = empty_frame(spark, _SCHEMA)
     plan = _executed(df)
     # zero-task JVM literal, not a parallelized Python RDD
     assert "LocalTableScan" in plan
@@ -39,8 +35,8 @@ def test_empty_frame_is_local_relation(spark):
 
 def test_pre_first_write_reads_are_local_relations(spark, tmp_path):
     root = str(tmp_path / "store")
-    rv = _read_versioned(spark, root, _SCHEMA)
-    kh = read_kind_history(
+    rv = read_latest(spark, root, _SCHEMA)
+    kh = read_history(
         spark, root, "doc", _SCHEMA, ("doc_id", "tokens", "kind")
     )
     for df in (rv, kh):
@@ -83,6 +79,22 @@ def test_sql_over_views_preserves_persist_cache(spark):
         assert "InMemoryRelation" in plan2
     finally:
         df.unpersist()
+
+
+def test_sql_over_views_rejects_non_numeric_literals(spark):
+    """Literals are pasted into the SQL text, so only numbers pass:
+    a string (or a bool, or None) fails fast at the helper instead of
+    as a syntax error or an injected fragment inside the statement."""
+    import pytest
+
+    from hha_spark.functions.local import sql_over_views
+
+    template = "SELECT {v} AS v"
+    assert sql_over_views(spark, template, v=7).first()[0] == 7
+    assert sql_over_views(spark, template, v=0.5).first()[0] == 0.5
+    for bad in ("1 OR 1=1", True, None):
+        with pytest.raises(TypeError, match="literal v="):
+            sql_over_views(spark, template, v=bad)
 
 
 def test_local_rows_arrow_localtablescan_roundtrip(spark):

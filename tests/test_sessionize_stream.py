@@ -13,11 +13,13 @@ import time
 
 from pyspark.sql import functions as F
 
+from hha_spark.streaming import store
+from hha_spark.streaming.runner import start_file_stream
 from hha_spark.streaming.sessionize import (
     final_sessions,
+    make_sessionize_processor,
     merge_adjacent_sessions,
     read_open_state,
-    run_streaming_sessionizer,
     sessionize_batch,
 )
 
@@ -59,15 +61,15 @@ def _run(spark, tmp_path):
         "store": str(tmp_path / "store"),
         "ckpt": str(tmp_path / "ckpt"),
     }
-    q = run_streaming_sessionizer(
+    start_file_stream(
         spark,
         data_root=_write_slices(spark, tmp_path),
         schema=SCHEMA,
-        store_root=paths["store"],
+        process=make_sessionize_processor(
+            spark, store_root=paths["store"], gap_us=GAP
+        ),
         checkpoint=paths["ckpt"],
-        gap_us=GAP,
-    )
-    q.awaitTermination()
+    ).awaitTermination()
     return paths
 
 
@@ -117,8 +119,6 @@ def test_epoch_retry_is_idempotent(spark, tmp_path):
     """Redelivering the final micro-batch (same epoch id) must leave
     the closed table and the state byte-for-byte equivalent — the
     effectively-exactly-once contract of the epoch-keyed sinks."""
-    from hha_spark.streaming.sessionize import make_sessionize_processor
-
     paths = _run(spark, tmp_path)
     key = lambda r: (r.user_id, r.start_us, r.end_us, r.n_events)  # noqa: E731
     before = sorted(
@@ -207,19 +207,20 @@ def _disorder_paths(tmp_path):
 
 
 def _run_disorder(spark, tmp_path):
-    from hha_spark.streaming.sessionize import run_disorder_sessionizer
+    from hha_spark.streaming.sessionize import (
+        make_disorder_sessionize_processor,
+    )
 
     paths = _disorder_paths(tmp_path)
-    q = run_disorder_sessionizer(
+    start_file_stream(
         spark,
         data_root=_write_disorder_files(spark, tmp_path),
         schema=SCHEMA,
-        store_root=paths["store"],
+        process=make_disorder_sessionize_processor(
+            spark, store_root=paths["store"], gap_us=GAP, disorder_us=DIS_W
+        ),
         checkpoint=paths["ckpt"],
-        gap_us=GAP,
-        disorder_us=DIS_W,
-    )
-    q.awaitTermination()
+    ).awaitTermination()
     return paths
 
 
@@ -262,13 +263,12 @@ def test_disorder_stream_equals_batch(spark, tmp_path):
     # (watermark passed them) AND events sat in the buffer
     from hha_spark.streaming.sessionize import (
         _STORE_SCHEMA,
-        _read_versioned,
         read_closed_sessions,
     )
 
     assert read_closed_sessions(spark, paths["store"]).count() > 0
-    store = _read_versioned(spark, paths["store"], _STORE_SCHEMA)
-    assert store.where("kind = 'buf'").count() > 0  # events sat in the buffer
+    latest = store.read_latest(spark, paths["store"], _STORE_SCHEMA)
+    assert latest.where("kind = 'buf'").count() > 0  # events sat in the buffer
 
 
 def test_ordered_processor_is_wrong_on_disordered_delivery(spark, tmp_path):
@@ -280,15 +280,15 @@ def test_ordered_processor_is_wrong_on_disordered_delivery(spark, tmp_path):
         "store": str(tmp_path / "ostore"),
         "ckpt": str(tmp_path / "ockpt"),
     }
-    q = run_streaming_sessionizer(
+    start_file_stream(
         spark,
         data_root=_write_disorder_files(spark, tmp_path),
         schema=SCHEMA,
-        store_root=paths["store"],
+        process=make_sessionize_processor(
+            spark, store_root=paths["store"], gap_us=GAP
+        ),
         checkpoint=paths["ckpt"],
-        gap_us=GAP,
-    )
-    q.awaitTermination()
+    ).awaitTermination()
     ordered = sorted(
         map(
             _session_key,
@@ -308,6 +308,18 @@ def test_ordered_processor_is_wrong_on_disordered_delivery(spark, tmp_path):
     u4_ordered = [k for k in ordered if k[0] == 4]
     u4_batch = [k for k in batch if k[0] == 4]
     assert (4, 0, 80, 2) in u4_batch and (4, 0, 80, 2) not in u4_ordered
+
+
+def test_disorder_restart_from_checkpoint_across_queries(spark, tmp_path):
+    """Kill the stream between micro-batches and START A NEW QUERY on
+    the same checkpoint: the file source must resume at the right
+    offset and the versioned state/buffer must carry across processes,
+    so the final result still equals one-shot batch sessionization.
+    The epoch-retry test covers redelivery WITHIN a process; this
+    covers the restart WITH a fresh StreamingQuery."""
+    from test_stream_restart import check_restart, disorder_sessionize_case
+
+    check_restart(spark, tmp_path, disorder_sessionize_case())
 
 
 def test_disorder_epoch_retry_is_idempotent(spark, tmp_path):
@@ -341,82 +353,6 @@ def test_disorder_epoch_retry_is_idempotent(spark, tmp_path):
         spark.createDataFrame(DIS_FILES[-1], SCHEMA), len(DIS_FILES) - 1
     )
     assert snapshot() == before
-
-
-def test_disorder_restart_from_checkpoint_across_queries(spark, tmp_path):
-    """Kill the stream between micro-batches and START A NEW QUERY on
-    the same checkpoint: the file source must resume at the right
-    offset and the versioned state/buffer must carry across processes,
-    so the final result still equals one-shot batch sessionization.
-    This is the recovery contract a real deployment leans on — the
-    epoch-retry test covers redelivery WITHIN a process; this covers
-    the restart WITH a fresh StreamingQuery."""
-    from hha_spark.streaming.sessionize import (
-        final_sessions_disorder,
-        run_disorder_sessionizer,
-    )
-
-    in_dir = str(tmp_path / "din")
-    os.makedirs(in_dir)
-    base = time.time() - 500
-
-    def write_file(i):
-        d = str(tmp_path / f"ds{i}")
-        spark.createDataFrame(DIS_FILES[i], SCHEMA).coalesce(1).write.parquet(d)
-        (part,) = glob.glob(f"{d}/part-*.parquet")
-        dst = f"{in_dir}/slice{i}.parquet"
-        shutil.move(part, dst)
-        os.utime(dst, (base + 10 * i, base + 10 * i))
-
-    paths = _disorder_paths(tmp_path)
-
-    def start():
-        return run_disorder_sessionizer(
-            spark,
-            data_root=in_dir,
-            schema=SCHEMA,
-            store_root=paths["store"],
-            checkpoint=paths["ckpt"],
-            gap_us=GAP,
-            disorder_us=DIS_W,
-        )
-
-    # first incarnation sees only files 0 and 1, drains them, dies
-    write_file(0)
-    write_file(1)
-    q1 = start()
-    q1.awaitTermination()
-    mid_versions = {
-        d for d in os.listdir(paths["store"]) if d.startswith("v")
-    }
-
-    # file 2 lands while the process is down; a NEW query on the same
-    # checkpoint must pick up exactly there (epoch 2), not reprocess
-    write_file(2)
-    q2 = start()
-    q2.awaitTermination()
-    assert "v2" in set(os.listdir(paths["store"]))
-    assert "v2" not in mid_versions  # epoch 2 ran in the second query
-
-    streamed = sorted(
-        map(
-            _session_key,
-            final_sessions_disorder(
-                spark,
-                store_root=paths["store"],
-                gap_us=GAP,
-            ).collect(),
-        )
-    )
-    batch = sorted(
-        map(
-            _session_key,
-            sessionize_batch(
-                spark.createDataFrame(ROWS_D, SCHEMA), gap_us=GAP
-            ).collect(),
-        )
-    )
-    assert streamed == batch
 
 
 # --- property: random bounded-disorder delivery == batch -------------------

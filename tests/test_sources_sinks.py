@@ -3,6 +3,8 @@ sink round-trip, and the full batch cycle with cross-cycle TTL dedup."""
 
 from __future__ import annotations
 
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from hha_spark.config import DetectorParams
@@ -138,6 +140,20 @@ def test_compact_alerts_bounds_table(spark, tmp_path):
     assert recent_alerts(spark, path, now=NOW, ttl_sec=300).count() == 2
     # compacting a missing table is a no-op
     assert compact_alerts(spark, str(tmp_path / "nope"), now=NOW, keep_sec=1) == 0
+
+
+def test_alerts_sink_raises_unless_table_is_absent(spark):
+    """Only an absent table means "no alerts yet". A table the engine
+    cannot reach (here: a filesystem scheme with no implementation)
+    must raise — returning None would silently switch TTL dedup off
+    and re-raise every alert."""
+    from hha_spark.sinks.alerts import compact_alerts
+
+    bad = "nosuchfs://x/alerts"
+    with pytest.raises(Py4JJavaError, match="nosuchfs"):
+        recent_alerts(spark, bad, now=NOW, ttl_sec=300)
+    with pytest.raises(Py4JJavaError, match="nosuchfs"):
+        compact_alerts(spark, bad, now=NOW, keep_sec=300)
 
 
 def test_alerts_roundtrip_through_detect_spikes(spark, tmp_path):

@@ -22,11 +22,8 @@ from hha_spark.streaming.curation_stream import (
     make_curation_funnel_processor,
 )
 from hha_spark.streaming.sessionize import (
-    _read_versioned,
-    _state_versions,
     make_sessionize_processor,
     read_closed_sessions,
-    read_kind_history,
     read_open_state,
 )
 from hha_spark.streaming.store import (
@@ -35,7 +32,10 @@ from hha_spark.streaming.store import (
     _MARKER,
     _STAGING,
     compact_store,
+    read_history,
+    read_latest,
     recover_compaction,
+    versions,
 )
 
 DOC_SCHEMA = "doc_id long, source string, text string"
@@ -65,7 +65,7 @@ def _curation_view(spark, root: str):
         kind: sorted(
             map(
                 tuple,
-                read_kind_history(
+                read_history(
                     spark, root, kind, _CUR_STORE_SCHEMA.replace(
                         ", kind string", ""
                     ),
@@ -80,7 +80,7 @@ def _curation_view(spark, root: str):
             ("raw", ("source", "n")),
         )
     }
-    latest = _read_versioned(spark, root, _CUR_STORE_SCHEMA)
+    latest = read_latest(spark, root, _CUR_STORE_SCHEMA)
     state = {
         kind: sorted(
             map(
@@ -105,7 +105,7 @@ def test_compaction_preserves_every_curation_reader_view(spark, tmp_path):
     release_tracked()
     res = compact_store(spark, root, history_kinds=CURATION_HISTORY)
     assert res == {"folded": 2, "base": 0, "skipped_stateful": []}
-    assert _state_versions(spark, root) == [0, 2, 3]
+    assert versions(spark, root) == [0, 2, 3]
     # provenance marker rode into the merged base dir
     meta = json.loads(open(f"{root}/v0/{_MARKER}").read())
     assert meta == {"base": 0, "folded": [0, 1]}
@@ -189,7 +189,7 @@ def test_compaction_preserves_sessionize_store(spark, tmp_path):
         "base": 0,
         "skipped_stateful": [],
     }
-    assert _state_versions(spark, root) == [0, 2, 3]
+    assert versions(spark, root) == [0, 2, 3]
     assert (
         sorted(map(tuple, read_closed_sessions(spark, root).collect()))
         == closed_before
@@ -236,7 +236,7 @@ def test_compaction_preserves_attribution_store(spark, tmp_path):
     attr_before = sorted(
         map(
             tuple,
-            read_kind_history(
+            read_history(
                 spark, root, "attr",
                 "user_id long, ts_s long, ts2_s long",
                 ("user_id", "ts_s", "ts2_s"),
@@ -248,7 +248,7 @@ def test_compaction_preserves_attribution_store(spark, tmp_path):
     assert compact_store(
         spark, root, history_kinds=ATTRIBUTION_HISTORY
     ) == {"folded": 2, "base": 0, "skipped_stateful": []}
-    assert _state_versions(spark, root) == [0, 2, 3]
+    assert versions(spark, root) == [0, 2, 3]
     assert (
         sorted(
             map(
@@ -264,7 +264,7 @@ def test_compaction_preserves_attribution_store(spark, tmp_path):
         sorted(
             map(
                 tuple,
-                read_kind_history(
+                read_history(
                     spark, root, "attr",
                     "user_id long, ts_s long, ts2_s long",
                     ("user_id", "ts_s", "ts2_s"),
@@ -305,7 +305,7 @@ def test_crash_recovery_every_protocol_step(spark, tmp_path):
     os.remove(f"{r}/{_STAGING}/{_MARKER}")
     assert recover_compaction(spark, r) == "discarded"
     release_tracked()
-    assert _state_versions(spark, r) == [0, 1, 2, 3]
+    assert versions(spark, r) == [0, 1, 2, 3]
     assert _curation_view(spark, r) == expect
 
     # (b) crash after marker, before any delete
@@ -313,7 +313,7 @@ def test_crash_recovery_every_protocol_step(spark, tmp_path):
     shutil.copytree(staged_src, f"{r}/{_STAGING}")
     assert recover_compaction(spark, r) == "completed"
     release_tracked()
-    assert _state_versions(spark, r) == [0, 2, 3]
+    assert versions(spark, r) == [0, 2, 3]
     assert _curation_view(spark, r) == expect
 
     # (c) crash after deleting one old version
@@ -322,7 +322,7 @@ def test_crash_recovery_every_protocol_step(spark, tmp_path):
     shutil.rmtree(f"{r}/v1")
     assert recover_compaction(spark, r) == "completed"
     release_tracked()
-    assert _state_versions(spark, r) == [0, 2, 3]
+    assert versions(spark, r) == [0, 2, 3]
     assert _curation_view(spark, r) == expect
 
     # (d) crash after all deletes, rename pending
@@ -332,7 +332,7 @@ def test_crash_recovery_every_protocol_step(spark, tmp_path):
     shutil.rmtree(f"{r}/v1")
     assert recover_compaction(spark, r) == "completed"
     release_tracked()
-    assert _state_versions(spark, r) == [0, 2, 3]
+    assert versions(spark, r) == [0, 2, 3]
     assert _curation_view(spark, r) == expect
 
     # (e) torn marker (crash mid-marker-write before the tmp rename
@@ -343,7 +343,7 @@ def test_crash_recovery_every_protocol_step(spark, tmp_path):
     open(f"{r}/{_STAGING}/{_MARKER}", "w").close()
     assert recover_compaction(spark, r) == "discarded"
     release_tracked()
-    assert _state_versions(spark, r) == [0, 1, 2, 3]
+    assert versions(spark, r) == [0, 1, 2, 3]
     assert _curation_view(spark, r) == expect
 
     # compact_store itself heals a crashed run before starting over
@@ -356,7 +356,7 @@ def test_crash_recovery_every_protocol_step(spark, tmp_path):
         "skipped_stateful": [],
     }
     release_tracked()
-    assert _state_versions(spark, r) == [0, 2, 3]
+    assert versions(spark, r) == [0, 2, 3]
     assert _curation_view(spark, r) == expect
 
 
@@ -384,7 +384,7 @@ def test_compact_every_knob_bounds_dirs_and_preserves_funnel(
     # minor folds: epoch 3 folded stubs {0,1} -> base v0; epoch 5
     # folded stubs {2,3} -> base v2 (the earlier base is NOT
     # rewritten — amortized-linear write cost)
-    assert _state_versions(spark, root) == [0, 2, 4, 5]
+    assert versions(spark, root) == [0, 2, 4, 5]
     flush = sorted(
         map(tuple, final_curation_funnel(spark, store_root=root).collect())
     )
@@ -404,7 +404,7 @@ def test_compact_every_knob_bounds_dirs_and_preserves_funnel(
     assert compact_store(
         spark, root, history_kinds=CURATION_HISTORY, mode="major"
     ) == {"folded": 2, "base": 0, "skipped_stateful": []}
-    assert _state_versions(spark, root) == [0, 4, 5]
+    assert versions(spark, root) == [0, 4, 5]
     flush_major = sorted(
         map(tuple, final_curation_funnel(spark, store_root=root).collect())
     )
@@ -430,7 +430,7 @@ def test_compaction_skips_stateful_stub(spark, tmp_path):
         "skipped_stateful": [1],
     }
     # v1 untouched (stale label plant still there), 0 and 2 folded
-    assert _state_versions(spark, root) == [0, 1, 3, 4]
+    assert versions(spark, root) == [0, 1, 3, 4]
     assert os.path.isdir(f"{root}/v1/kind=label")
     release_tracked()
     assert _curation_view(spark, root) == before
@@ -440,7 +440,7 @@ def test_malformed_marker_json_is_discarded_not_raised(spark, tmp_path):
     """A marker that parses as JSON but lacks the base/folded fields
     (e.g. truncated to '{}') is treated exactly like a torn marker:
     staging discarded, store untouched, NO exception — a raise here
-    would propagate out of every run_* runner's startup recovery and
+    would propagate out of every processor's build-time recovery and
     wedge all stream restarts (round-9 advisor, store.py:114)."""
     root = str(tmp_path / "store")
     _build_curation_store(spark, root)
@@ -454,14 +454,14 @@ def test_malformed_marker_json_is_discarded_not_raised(spark, tmp_path):
             fh.write(bad)
         assert recover_compaction(spark, root) == "discarded", bad
         assert not os.path.exists(staging)
-        assert _state_versions(spark, root) == [0, 1, 2, 3]
+        assert versions(spark, root) == [0, 1, 2, 3]
     release_tracked()
     assert _curation_view(spark, root) == expect
 
 
 def test_final_readers_heal_crashed_fold(spark, tmp_path):
     """A consumer that goes straight to a final flush — without first
-    restarting a run_* runner or invoking tools/compact.py — must not
+    building a processor or invoking tools/compact.py — must not
     silently read a store whose folded history lives only in
     _compact.staging (round-9 advisor, curation_stream.py:488). Every
     store read rolls a complete staged fold forward itself."""
@@ -485,7 +485,7 @@ def test_final_readers_heal_crashed_fold(spark, tmp_path):
     assert _curation_view(spark, r) == expect
     # and the read healed the store on disk
     assert not os.path.exists(f"{r}/{_STAGING}")
-    assert _state_versions(spark, r) == [0, 2, 3]
+    assert versions(spark, r) == [0, 2, 3]
     release_tracked()
 
     # an INCOMPLETE staging (no marker — mid-build crash or a live
@@ -496,7 +496,7 @@ def test_final_readers_heal_crashed_fold(spark, tmp_path):
     os.remove(f"{r2}/{_STAGING}/{_MARKER}")
     assert _curation_view(spark, r2) == expect
     assert os.path.isdir(f"{r2}/{_STAGING}")
-    assert _state_versions(spark, r2) == [0, 1, 2, 3]
+    assert versions(spark, r2) == [0, 1, 2, 3]
     release_tracked()
 
 
@@ -573,4 +573,4 @@ def test_attribution_final_reader_heals_crashed_fold(spark, tmp_path):
     shutil.rmtree(f"{r}/v1")
     assert _flush(r) == expect
     assert not os.path.exists(f"{r}/{_STAGING}")
-    assert _state_versions(spark, r) == [0, 2, 3]
+    assert versions(spark, r) == [0, 2, 3]

@@ -1,7 +1,7 @@
 """Per-phase wall profile of the streaming-curation gates.
 
 Runs the same fixture each gate uses (md5-interleaved slices of the
-sf documents table through run_streaming_curation) with the
+sf documents table through the incremental funnel processor) with the
 processor's `stats` timers exposed, printing the per-phase split —
 t_build (driver-side epoch-plan construction: py4j chatter + eager
 JVM analysis of every intermediate frame), t_cross_probe (the one
@@ -41,8 +41,9 @@ def run_gate(spark, sf_dir: str, gate: str) -> dict:
     from hha_spark.queries.corpus import BUDGET_PCT, FILL_SALT
     from hha_spark.streaming.curation_stream import (
         final_curation_funnel,
-        run_streaming_curation,
+        make_curation_funnel_processor,
     )
+    from hha_spark.streaming.runner import start_file_stream
 
     docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
     stats: dict = {}
@@ -66,18 +67,16 @@ def run_gate(spark, sf_dir: str, gate: str) -> dict:
         in_dir = _write_file_slices(docs, slice_col, tmp, n_slices)
         t_setup = time.monotonic() - t_all
         t0 = time.monotonic()
-        q = run_streaming_curation(
+        start_file_stream(
             spark,
             data_root=in_dir,
             schema="doc_id long, source string, text string",
-            store_root=f"{tmp}/store",
+            process=make_curation_funnel_processor(
+                spark, store_root=f"{tmp}/store", stats=stats, **kw
+            ),
             checkpoint=f"{tmp}/ckpt",
             max_files_per_trigger=per_trigger,
-            available_now=True,
-            stats=stats,
-            **kw,
-        )
-        q.awaitTermination()
+        ).awaitTermination()
         t_stream = time.monotonic() - t0
         t0 = time.monotonic()
         out = final_curation_funnel(

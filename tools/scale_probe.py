@@ -110,7 +110,7 @@ def _attribution_disorder_probe(spark, ev: DataFrame) -> DataFrame:
         final_attributions,
         make_disorder_attribution_processor,
     )
-    from hha_spark.streaming.sessionize import _read_versioned
+    from hha_spark.streaming.store import read_latest
 
     two = ev.where(F.col("event_type").isin("click", "purchase")).select(
         "user_id",
@@ -142,7 +142,7 @@ def _attribution_disorder_probe(spark, ev: DataFrame) -> DataFrame:
             pairs.collect(), "user_id long, ts_s long, ts2_s long"
         )
         state_rows = (
-            _read_versioned(spark, f"{tmp}/store", _ATTR_STORE_SCHEMA)
+            read_latest(spark, f"{tmp}/store", _ATTR_STORE_SCHEMA)
             .where(F.col("kind").isin("click", "buf"))
             .count()
         )
@@ -166,11 +166,14 @@ def _store_compaction_probe(spark, k: int) -> DataFrame:
     import tempfile
 
     from hha_spark.streaming.sessionize import (
-        _state_versions,
         make_sessionize_processor,
         read_closed_sessions,
     )
-    from hha_spark.streaming.store import SESSIONIZE_HISTORY, compact_store
+    from hha_spark.streaming.store import (
+        SESSIONIZE_HISTORY,
+        compact_store,
+        versions,
+    )
 
     epochs = 6 * k
     tmp = tempfile.mkdtemp(prefix="hha_probe_compact_")
@@ -187,7 +190,7 @@ def _store_compaction_probe(spark, k: int) -> DataFrame:
         t0 = time.perf_counter()
         n_before = read_closed_sessions(spark, f"{tmp}/store").count()
         read_before = time.perf_counter() - t0
-        dirs_before = len(_state_versions(spark, f"{tmp}/store"))
+        dirs_before = len(versions(spark, f"{tmp}/store"))
         compact_store(
             spark, f"{tmp}/store", history_kinds=SESSIONIZE_HISTORY
         )
@@ -199,7 +202,7 @@ def _store_compaction_probe(spark, k: int) -> DataFrame:
         EXTRA["store_compaction"] = {
             "epochs": epochs,
             "dirs_before": dirs_before,
-            "dirs_after": len(_state_versions(spark, f"{tmp}/store")),
+            "dirs_after": len(versions(spark, f"{tmp}/store")),
             "read_sec_before": round(read_before, 3),
             "read_sec_after": round(read_after, 3),
         }
@@ -231,8 +234,8 @@ def _stream_funnel_probe(spark, docs: DataFrame, k: int) -> DataFrame:
         final_curation_funnel,
         make_curation_funnel_processor,
     )
-    from hha_spark.streaming.sessionize import _read_versioned
     from hha_spark.streaming.curation_stream import _CUR_STORE_SCHEMA
+    from hha_spark.streaming.store import read_latest
 
     batches = [
         docs.select("doc_id", "source", "text")
@@ -253,7 +256,7 @@ def _stream_funnel_probe(spark, docs: DataFrame, k: int) -> DataFrame:
         for e, b in enumerate(batches):
             proc(b, e)
         stream_wall = time.perf_counter() - t0
-        cur = _read_versioned(spark, f"{tmp}/store", _CUR_STORE_SCHEMA)
+        cur = read_latest(spark, f"{tmp}/store", _CUR_STORE_SCHEMA)
         state_rows = {
             r["kind"]: r["n"]
             for r in cur.groupBy("kind")
@@ -407,7 +410,7 @@ def _funnel_epoch_axis_probe(spark, k: int) -> DataFrame:
         final_curation_funnel,
         make_curation_funnel_processor,
     )
-    from hha_spark.streaming.sessionize import _read_versioned
+    from hha_spark.streaming.store import read_latest
 
     epochs = 6 * k
     all_docs = scaled_docs(spark, epochs).select(
@@ -433,7 +436,7 @@ def _funnel_epoch_axis_probe(spark, k: int) -> DataFrame:
             before = stats.get("t_write", 0.0)
             proc(batch, e)
             per_epoch_write.append(stats.get("t_write", 0.0) - before)
-        cur = _read_versioned(spark, f"{tmp}/store", _CUR_STORE_SCHEMA)
+        cur = read_latest(spark, f"{tmp}/store", _CUR_STORE_SCHEMA)
         state_rows = {
             r["kind"]: r["n"]
             for r in cur.groupBy("kind")
