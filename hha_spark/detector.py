@@ -2,8 +2,9 @@
 reference's main loop (hha.py:315-327).
 
 One cycle = read pruned windows -> detect_spikes (S1-S8) -> gate by
-watchlist -> suppress recently-alerted keys -> append to the alerts
-table -> emit rules. The reference's hand-rolled pieces map as:
+watchlist -> suppress recently-alerted keys -> collect the rules (the
+cycle's one Spark action) -> append those rows to the alerts table.
+The reference's hand-rolled pieces map as:
 
     wall-clock window bounds (hha.py:320-323) -> `now` parameter
     hour-file name math (hha.py:293-301)      -> partition pruning
@@ -27,7 +28,12 @@ from pyspark.sql import functions as F
 
 from hha_spark.config import DetectorParams
 from hha_spark.operators.spike import detect_spikes
-from hha_spark.sinks.alerts import append_alerts, collect_rules, recent_alerts
+from hha_spark.sinks.alerts import (
+    alerts_frame,
+    append_alerts,
+    collect_rules,
+    recent_alerts,
+)
 from hha_spark.sources.histograms import read_window
 
 from hha_spark.caching import release_tracked
@@ -71,7 +77,7 @@ def run_cycle(
 
     obs_in = obs_alerts = None
     if metrics_out is not None:
-        obs_in = Observation("cycle_input")
+        obs_in, obs_alerts = Observation("cycle_input"), Observation("cycle_alerts")
         hist = hist.observe(
             obs_in,
             F.count(F.lit(1)).alias("n_hist_rows"),
@@ -83,8 +89,6 @@ def run_cycle(
     alerts = detect_spikes(
         hist, params=p, now=now, zones=zones, prior_alerts=prior
     )
-    if obs_alerts is None and metrics_out is not None:
-        obs_alerts = Observation("cycle_alerts")
     if obs_alerts is not None:
         alerts = alerts.observe(
             obs_alerts,
@@ -92,22 +96,23 @@ def run_cycle(
             F.sum((F.col("scope") == "ip").cast("long")).alias("n_ip_alerts"),
             F.sum((F.col("scope") == "net").cast("long")).alias("n_net_alerts"),
         )
-    alerts = alerts.persist()
     try:
-        # materialize BEFORE appending: the TTL anti-join reads the
-        # same table the append writes, and Spark's refreshByPath
-        # invalidates the cached plan on write — collecting after the
-        # append would re-evaluate against the post-append table and
-        # suppress every alert just raised
+        # the cycle's one action. The TTL anti-join reads the table the
+        # append writes, so the append writes these collected rows as a
+        # driver-local frame and never re-evaluates the plan (after the
+        # write it would suppress every alert just raised); an empty
+        # cycle appends nothing
         rules = collect_rules(alerts)
-        append_alerts(alerts, alerts_path, detected_at=now)
+        if rules:
+            append_alerts(
+                alerts_frame(spark, rules), alerts_path, detected_at=now
+            )
         if metrics_out is not None:
             metrics_out.update(obs_in.get)
             metrics_out.update(obs_alerts.get)
         return rules
     finally:
-        alerts.unpersist()
-        # detect_spikes registers its fused/cur/prev persists with the
-        # session cache registry; a long-lived detector must release
-        # them every cycle or the cache grows without bound
+        # detect_spikes registers its persist of the fused /32 frame
+        # with the session cache registry; a long-lived detector must
+        # release it every cycle or the cache grows without bound
         release_tracked()

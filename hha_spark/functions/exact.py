@@ -77,6 +77,24 @@ def dec_sum_mul(col_a: str, one_plus_minus: str, out: str | None = None) -> Colu
     return e.alias(out) if out else e
 
 
+def int_avg_floor(total: str, n: str) -> Column:
+    """`total DIV n` over an integer sum taken with TRY_SUM and the
+    count `n` of the values it summed; NULL when n is 0.
+
+    floor(avg) exactly, at any scale, for the non-negative counters
+    the spike detector averages: a BIGINT sum, no decimal cast (a
+    DECIMAL(18,6) cast turns a value >= 10^12 into NULL) and no double
+    rounding past 2^53. The int64 envelope: Spark's non-ANSI SUM wraps
+    silently past 2^63 where DuckDB raises, so the sum is a TRY_SUM
+    (NULL on overflow) and a NULL sum over n > 0 values raises here
+    instead of yielding a wrong average.
+    """
+    return F.expr(
+        f"CASE WHEN {n} > 0 THEN COALESCE({total}, RAISE_ERROR("
+        f"'exact integer average: BIGINT sum past int64')) DIV {n} END"
+    )
+
+
 def trunc_avg_exact(col: str, out: str = "sum_val") -> Column:
     """floor(avg(col)) computed exactly: decimal SUM / COUNT, floored.
 

@@ -102,7 +102,11 @@ def arrow_rows_frame(
 ) -> DataFrame:
     """Bounded driver-local rows (tuples or pyspark Rows, positional)
     as an Arrow-backed DataFrame with the given DDL or StructType
-    `schema`."""
+    `schema`.
+
+    NOT NULL holds at construction: ``createDataFrame`` casts the
+    table to the schema's Arrow form, whose non-nullable fields raise
+    ValueError on a None (tests/test_local_frames.py pins this)."""
     import pyarrow as pa
 
     if isinstance(schema, StructType):

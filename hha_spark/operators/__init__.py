@@ -2,6 +2,7 @@ from hha_spark.operators.spike import (
     compare_windows,
     detect_spikes,
     rollup_averages,
+    rollup_compare,
     spike_filter,
     window_averages,
 )
@@ -9,6 +10,7 @@ from hha_spark.operators.spike import (
 __all__ = [
     "window_averages",
     "rollup_averages",
+    "rollup_compare",
     "compare_windows",
     "spike_filter",
     "detect_spikes",

@@ -8,10 +8,10 @@ SURVEY.md §2.1; every quirk preserved here is cited.
 Spark-first design decisions (vs the reference):
   * /24 derivation is a native bitmask expression (functions/ip.py),
     not a Python UDF (hha.py:20) — keeps whole-stage codegen intact.
-  * cur/prev frames are persist()ed, replacing the RDD round-trip
-    materialization hack (`recreateDF`, hha.py:119-128); each frame is
-    consumed twice (the /32 join and the /24 rollup), so one shuffle's
-    output is reused instead of recomputed.
+  * both windows come from ONE conditional aggregation (the fused
+    path); its per-key frame is persist()ed, replacing the RDD
+    round-trip materialization hack (`recreateDF`, hha.py:119-128),
+    and feeds both the /32 filter and the /24 aggregate.
   * joins use a column-name list (no alias dance, hha.py:150,165-176).
   * watchlist gating is a broadcast left-semi join BEFORE any collect,
     replacing the driver-side `in zones` loop (hha.py:233-242).
@@ -21,13 +21,17 @@ Spark-first design decisions (vs the reference):
     the query behaves identically under ANSI and legacy modes (the
     reference relied on legacy int/0 -> NULL row-drop, SURVEY.md S6).
 
-Scale notes (100 TB design): the aggregations are partial-aggregated
-map-side by Catalyst before the shuffle; both joins are post-aggregate
-(cardinality = distinct keys, not raw rows) and AQE picks broadcast
-when the previous-window side is small. The /24 rollup consumes the
-already-aggregated /32 frame (avg-of-avg, hha.py:160-168 semantics),
-so raw data is scanned exactly twice (cur + prev windows) and shuffled
-once per window.
+Scale notes (100 TB design): raw data is scanned ONCE and shuffled
+once — one conditional aggregation yields both window averages per
+/32 key (fused_window_compare); the /24 branch is one more aggregate
+over that already-aggregated, persisted frame (avg-of-avg,
+hha.py:160-168 semantics; rollup_compare), whose cardinality is the
+distinct-key count, not raw rows. Both are partial-aggregated
+map-side by Catalyst, and no join remains on the comparison path;
+the watchlist and TTL gates are broadcast. Averages of the integral
+counter are BIGINT SUM DIV COUNT: exact at any scale, with no decimal
+arithmetic, and raising rather than wrapping past int64
+(functions/exact.int_avg_floor).
 """
 
 from __future__ import annotations
@@ -36,11 +40,12 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from hha_spark.config import DetectorParams
-from hha_spark.functions.ip import ip_to_net24
+from pyspark.sql.types import IntegralType
 
 from hha_spark.caching import tracked_persist
+from hha_spark.config import DetectorParams
+from hha_spark.functions.exact import int_avg_floor
+from hha_spark.functions.ip import ip_to_net24
 
 
 def _safe_ratio(num: Column, den: Column) -> Column:
@@ -52,6 +57,69 @@ def _safe_ratio(num: Column, den: Column) -> Column:
     return num / F.nullif(den, F.lit(0))
 
 
+def _is_integral(df: DataFrame, col: str) -> bool:
+    return isinstance(df.schema[col].dataType, IntegralType)
+
+
+def _avgs(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    values: dict[str, Column],
+    *,
+    integral: bool,
+) -> DataFrame:
+    """Per key, floor(avg) of the non-NULL values of each named
+    (typically CASE-conditional) column, all from ONE aggregation;
+    NULL where the key has none.
+
+    integral=True: BIGINT TRY_SUM DIV COUNT (exact.int_avg_floor) —
+    exact at any scale and raising past int64. Otherwise the
+    fractional path: an exact DECIMAL(18,6) sum over the count,
+    floored (what the events-domain oracles mirror).
+    """
+    aggs, outs = [], []
+    for i, (name, v) in enumerate(values.items()):
+        s, n = f"_sum{i}", f"_n{i}"
+        aggs += [
+            (F.try_sum(v) if integral else F.sum(v.cast("decimal(18,6)"))).alias(s),
+            F.count(v).alias(n),
+        ]
+        avg = (
+            int_avg_floor(s, n)
+            if integral
+            else F.when(F.col(n) > 0, F.floor(F.col(s) / F.col(n)).cast("long"))
+        )
+        outs.append(avg.alias(name))
+    return df.groupBy(*key_cols).agg(*aggs).select(*key_cols, *outs)
+
+
+def _clamp(
+    with_avgs: DataFrame,
+    key_cols: Sequence[str],
+    *,
+    q: float,
+    limit_new: int,
+    clamp_guard: bool,
+) -> DataFrame:
+    """S3/S4 by projection over (sum_val, prev_sum_val): the clamped
+    or defaulted baseline prev_sum_val2, NULL where sum_val is."""
+    clamp_cond = _safe_ratio(F.col("prev_sum_val"), F.col("sum_val")) > F.lit(q)
+    if clamp_guard:
+        clamp_cond = clamp_cond & (F.col("prev_sum_val") > F.lit(limit_new))
+    return with_avgs.select(
+        *key_cols,
+        "sum_val",
+        "prev_sum_val",
+        F.when(
+            F.col("sum_val").isNotNull(),
+            F.coalesce(
+                F.when(clamp_cond, F.lit(limit_new)).otherwise(F.col("prev_sum_val")),
+                F.lit(limit_new),
+            ),
+        ).alias("prev_sum_val2"),
+    )
+
+
 def window_averages(
     df: DataFrame,
     *,
@@ -61,7 +129,6 @@ def window_averages(
     lower: int | None = None,
     upper: int | None = None,
     out_col: str = "sum_val",
-    exact: bool = False,
 ) -> DataFrame:
     """S1 — per-key truncated average over a one-sided time window.
 
@@ -74,23 +141,20 @@ def window_averages(
     applied, hha.py:321-323): pass only `lower` or only `upper` for
     parity; both for a bounded window.
 
-    exact=True computes the average via exact decimal SUM / COUNT
-    (functions/exact.py) so the floored value is identical across
-    engines and partition orders — use for fractional value columns.
+    The average is exact, so identical across engines and partition
+    orders: BIGINT SUM DIV COUNT for integer columns (the kernel
+    fused_window_compare uses), a decimal SUM / COUNT for fractional
+    ones (functions/exact.py).
     """
-    from hha_spark.functions.exact import trunc_avg_exact
-
     cond = F.lit(True)
     if lower is not None:
         cond = cond & (F.col(time_col) > F.lit(lower))
     if upper is not None:
         cond = cond & (F.col(time_col) < F.lit(upper))
-    agg = (
-        trunc_avg_exact(value_col, out=out_col)
-        if exact
-        else F.floor(F.avg(value_col)).cast("long").alias(out_col)
+    return _avgs(
+        df.where(cond), key_cols, {out_col: F.col(value_col)},
+        integral=_is_integral(df, value_col),
     )
-    return df.where(cond).groupBy(*key_cols).agg(agg)
 
 
 def rollup_averages(
@@ -107,13 +171,48 @@ def rollup_averages(
     recomputation from raw rows — an intentional quirk we preserve.
     `bucket_expr` generalizes the /24 network derivation.
     """
-    return (
-        df.withColumn(bucket_name, bucket_expr)
-        .groupBy(*[c for c in group_cols], bucket_name)
-        # floor(avg(int)) == integer floor division for the
-        # non-negative counters handled here; DIV is exact at any
-        # scale (no double rounding past 2^53)
-        .agg(F.expr(f"CAST(SUM({value_col}) DIV COUNT(*) AS BIGINT)").alias(value_col))
+    return _avgs(
+        df.withColumn(bucket_name, bucket_expr),
+        [*group_cols, bucket_name],
+        {value_col: F.col(value_col)},
+        integral=True,
+    )
+
+
+def rollup_compare(
+    per_key: DataFrame,
+    *,
+    group_cols: Sequence[str],
+    bucket_expr: Column,
+    bucket_name: str,
+    q: float,
+    limit_new: int,
+) -> DataFrame:
+    """S2-S5 for buckets from ONE NULL-aware conditional aggregate
+    over fused_window_compare's per-key frame.
+
+    Per bucket, the current average is avg-of-avg over the keys with
+    a current average (sum_val NOT NULL) and the previous one over
+    the keys with a previous average — exactly rollup_averages on each
+    window's keys — and the comparison is compare_windows' left join
+    done by projection: buckets without current keys drop, buckets
+    without previous keys default to `limit_new`, and the clamp is
+    unguarded (hha.py:177-178). One shuffle and no join instead of two
+    rollups, two shuffles and a join.
+
+    Output: group_cols + [bucket_name, sum_val, prev_sum_val (raw,
+    NULL when absent), prev_sum_val2].
+    """
+    keys = [*group_cols, bucket_name]
+    with_avgs = _avgs(
+        per_key.withColumn(bucket_name, bucket_expr),
+        keys,
+        {"sum_val": F.col("sum_val"), "prev_sum_val": F.col("prev_sum_val")},
+        integral=True,
+    )
+    return _clamp(
+        with_avgs.where(F.col("sum_val").isNotNull()), keys,
+        q=q, limit_new=limit_new, clamp_guard=False,
     )
 
 
@@ -143,49 +242,31 @@ def fused_window_compare(
     miss).
 
     Bounds may be Columns (e.g. data-derived `now` broadcast via a
-    1-row cross join) or int literals. Averages use the exact decimal
-    path (functions/exact.py semantics). Output: all keys seen in
-    EITHER window, with
+    1-row cross join) or int literals. Integer value columns (the
+    histogram's CountPkt) average as BIGINT SUM DIV COUNT, exact at
+    any scale and raising past int64 (functions/exact.int_avg_floor);
+    fractional ones through the exact decimal path. Output: all keys
+    seen in EITHER window, with
         sum_val       cur avg (NULL when the key has no current rows)
         prev_sum_val  raw prev avg (NULL when absent)
         prev_sum_val2 clamped/defaulted baseline (S3/S4)
-    Callers filter `sum_val IS NOT NULL` for the alert path and reuse
-    prev columns for rollups.
+    Callers filter `sum_val IS NOT NULL` for the alert path; the
+    bucket rollup (rollup_compare) reads both averages.
     """
     lo = cur_lower if isinstance(cur_lower, Column) else F.lit(cur_lower)
     hi = prev_upper if isinstance(prev_upper, Column) else F.lit(prev_upper)
-    in_cur = F.col(time_col) > lo
-    in_prev = F.col(time_col) < hi
-    dec = F.col(value_col).cast("decimal(18,6)")
-    agg = df.groupBy(*key_cols).agg(
-        F.sum(F.when(in_cur, dec)).alias("_cur_sum"),
-        F.sum(F.when(in_cur, 1).otherwise(0)).alias("_cur_n"),
-        F.sum(F.when(in_prev, dec)).alias("_prev_sum"),
-        F.sum(F.when(in_prev, 1).otherwise(0)).alias("_prev_n"),
+    v = F.col(value_col)
+    with_avgs = _avgs(
+        df,
+        key_cols,
+        {
+            "sum_val": F.when(F.col(time_col) > lo, v),
+            "prev_sum_val": F.when(F.col(time_col) < hi, v),
+        },
+        integral=_is_integral(df, value_col),
     )
-    cur_avg = F.when(
-        F.col("_cur_n") > 0,
-        F.floor(F.col("_cur_sum") / F.col("_cur_n")).cast("long"),
-    )
-    prev_avg = F.when(
-        F.col("_prev_n") > 0,
-        F.floor(F.col("_prev_sum") / F.col("_prev_n")).cast("long"),
-    )
-    with_avgs = agg.select(*key_cols, cur_avg.alias("sum_val"), prev_avg.alias("prev_sum_val"))
-    clamp_cond = _safe_ratio(F.col("prev_sum_val"), F.col("sum_val")) > F.lit(q)
-    if clamp_guard:
-        clamp_cond = clamp_cond & (F.col("prev_sum_val") > F.lit(limit_new))
-    return with_avgs.select(
-        *key_cols,
-        "sum_val",
-        "prev_sum_val",
-        F.when(
-            F.col("sum_val").isNotNull(),
-            F.coalesce(
-                F.when(clamp_cond, F.lit(limit_new)).otherwise(F.col("prev_sum_val")),
-                F.lit(limit_new),
-            ),
-        ).alias("prev_sum_val2"),
+    return _clamp(
+        with_avgs, key_cols, q=q, limit_new=limit_new, clamp_guard=clamp_guard
     ).where((F.col("sum_val").isNotNull()) | (F.col("prev_sum_val").isNotNull()))
 
 
@@ -275,15 +356,14 @@ def detect_spikes(
     """
     p = params
     keys = ["num_protocol", "type_proto", "dst_ip"]
-    net_keys = ["num_protocol", "type_proto", "dst_net"]
-
+    net24 = ip_to_net24("dst_ip")
     if fused:
         # scale path: ONE scan + ONE shuffle produces both window
-        # averages and the /32 comparison; the /24 rollups derive
-        # from the same persisted frame (fused == two-frame proven by
-        # tests/test_equivalence.py). floor(avg(int)) via the exact
-        # decimal path is identical for integral counters and immune
-        # to double-precision loss on huge partial sums.
+        # averages and the /32 comparison, and ONE more aggregate over
+        # the same persisted frame both /24 windows and their
+        # comparison (fused == two-frame proven by
+        # tests/test_equivalence.py). Averages are exact BIGINT
+        # SUM DIV COUNT on the integral counter.
         base = fused_window_compare(
             histograms, key_cols=keys, value_col="CountPkt",
             time_col="timestamp", cur_lower=now - p.cur_window_sec,
@@ -292,26 +372,29 @@ def detect_spikes(
             clamp_guard=True,
         )
         if persist:
+            # feeds the /32 filter and the /24 aggregate; without it
+            # each branch scans and aggregates the window itself (the
+            # planner does not reuse one branch's /32 exchange for the
+            # other)
             base = tracked_persist(base)
-        cur = base.where(F.col("sum_val").isNotNull()).select(*keys, "sum_val")
-        prev = base.where(F.col("prev_sum_val").isNotNull()).select(
-            *keys, F.col("prev_sum_val").alias("sum_val")
-        )
         ip_cmp = base.where(F.col("sum_val").isNotNull())
+        net_cmp = rollup_compare(
+            base, group_cols=keys[:2], bucket_expr=net24, bucket_name="dst_net",
+            q=p.quotient_amplification, limit_new=p.limit_new_data_net,
+        )
     else:
         # reference-shape two-frame path (mirrors the two ReadData
         # calls, hha.py:137,147); kept for parity documentation and
-        # for callers whose windows come from different sources
-        # exact=True so this branch is bit-identical to the fused path
-        # (which always sums exactly): a double avg landing on an
-        # integer boundary could otherwise floor differently
+        # for callers whose windows come from different sources.
+        # Integral CountPkt averages with the fused path's exact
+        # integer kernel, so both branches agree at any scale
         cur = window_averages(
             histograms, key_cols=keys, value_col="CountPkt",
-            lower=now - p.cur_window_sec, exact=True,
+            lower=now - p.cur_window_sec,
         )
         prev = window_averages(
             histograms, key_cols=keys, value_col="CountPkt",
-            upper=now - p.prev_window_sec, exact=True,
+            upper=now - p.prev_window_sec,
         )
         if persist:
             # each frame feeds both the /32 comparison and the /24
@@ -322,17 +405,17 @@ def detect_spikes(
             cur, prev, key_cols=keys, q=p.quotient_amplification,
             limit_new=p.limit_new_data, clamp_guard=True,
         )
-
-    cur_net = rollup_averages(
-        cur, group_cols=keys[:2], bucket_expr=ip_to_net24("dst_ip"), bucket_name="dst_net"
-    )
-    prev_net = rollup_averages(
-        prev, group_cols=keys[:2], bucket_expr=ip_to_net24("dst_ip"), bucket_name="dst_net"
-    )
-    net_cmp = compare_windows(
-        cur_net, prev_net, key_cols=net_keys, q=p.quotient_amplification,
-        limit_new=p.limit_new_data_net, clamp_guard=False,
-    )
+        cur_net = rollup_averages(
+            cur, group_cols=keys[:2], bucket_expr=net24, bucket_name="dst_net"
+        )
+        prev_net = rollup_averages(
+            prev, group_cols=keys[:2], bucket_expr=net24, bucket_name="dst_net"
+        )
+        net_cmp = compare_windows(
+            cur_net, prev_net, key_cols=[*keys[:2], "dst_net"],
+            q=p.quotient_amplification,
+            limit_new=p.limit_new_data_net, clamp_guard=False,
+        )
 
     ip_alerts = spike_filter(ip_cmp, q=p.quotient_amplification).select(
         "num_protocol", "type_proto",

@@ -57,24 +57,28 @@ _MODULES = (
 )
 
 # Order is the driver's verification window: it oracle-checks the FIRST
-# 50 names yielded. Current rotation: positions 1-9 are the gates
-# whose code changed with the single stream starter
-# (streaming/runner.py::start_file_stream) and the public store module
-# (streaming/store.py) — every store-backed gate plus the two
-# foreachBatch gates and the spike-detector gate that now start
-# through it. Positions 10-43 are the 34 rows whose last driver check
-# is the round-7 window (the oldest in the registry), in name order;
-# positions 44-50 are the first 7 round-8-vintage rows in name order.
+# 50 names yielded. Current rotation: positions 1-5 are the spike
+# queries whose kernel changed (operators/spike.py: integer-exact
+# fused averages, the one-aggregate bucket rollup) and the streaming
+# detector gate, whose epoch now appends its collected alerts;
+# positions 6-13 are the other gates whose code changed with the
+# single stream starter (streaming/runner.py::start_file_stream) and
+# the public store module (streaming/store.py). Positions 14-47 are
+# the 34 rows whose last driver check is the round-7 window (the
+# oldest in the registry), in name order; positions 48-50 are the
+# first 3 round-8-vintage rows in name order.
 # The CORRECTNESS_r*.json artifacts give each name's last checked
 # round. Names here that fall out of the registry are ignored
 # defensively; queries not listed follow in module order.
 _NEVER_CHECKED_FIRST = (
-    # -- 9 gates on the new stream starter / store API --
+    # -- 5 spike queries on the changed detector kernel --
+    "spike_events_alerts", "spike_events_compare", "spike_events_gated",
+    "spike_events_net_rollup", "stream_spike_alerts",
+    # -- 8 gates on the new stream starter / store API --
     "stream_sessionize_incremental", "stream_sessionize_disorder",
     "stream_attribution_disorder", "stream_curation_funnel",
     "stream_curation_compacted", "stream_curation_spilled",
     "stream_cms_heavy", "stream_temperature_mixture",
-    "stream_spike_alerts",
     # -- 34 round-7-vintage rows, name order --
     "event_value_stats", "events_json_extract",
     "events_pairs_within_30min", "events_session_window",
@@ -92,10 +96,8 @@ _NEVER_CHECKED_FIRST = (
     "sql_nation_revenue", "stratified_sample_docs",
     "suppliers_in_rich_nations", "top3_customers_per_nation",
     "top_revenue_orders",
-    # -- first 7 round-8-vintage rows, name order --
+    # -- first 3 round-8-vintage rows, name order --
     "ann_ivf_recall", "ann_topk_ivf_trained", "benchmark_contamination",
-    "copurchase_part_pairs", "corpus_dup_spans", "corpus_mixture_weights",
-    "corpus_pii_scrub",
 )
 
 

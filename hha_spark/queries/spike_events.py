@@ -25,9 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hha_spark.operators.spike import (
-    compare_windows,
     fused_window_compare,
     rollup_averages,
+    rollup_compare,
     spike_filter,
 )
 from hha_spark.sources.tables import US_PER_DAY, events_ts_us, load_table
@@ -81,12 +81,6 @@ def _cur_from(fused: DataFrame) -> DataFrame:
     return fused.where(F.col("sum_val").isNotNull()).select(*KEYS, "sum_val")
 
 
-def _prev_from(fused: DataFrame) -> DataFrame:
-    return fused.where(F.col("prev_sum_val").isNotNull()).select(
-        *KEYS, F.col("prev_sum_val").alias("sum_val")
-    )
-
-
 def spike_events_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1+S3+S4 exposed: per-key cur/prev/clamped-baseline frame."""
     fused = _fused(spark, sf_dir)
@@ -104,8 +98,8 @@ def spike_events_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Alert rows carry the BASELINE in sum_val (reference quirk,
     hha.py:199,210) plus a scope marker instead of the reference's
     mixed-type positional column (hha.py:213-214). The fused frame is
-    persisted once and feeds the /32-analog filter and both bucket
-    rollups.
+    persisted once and feeds the /32-analog filter and the one bucket
+    aggregate (rollup_compare) that yields both bucket windows.
     """
     fused = tracked_persist(_fused(spark, sf_dir))
     ip_alerts = spike_filter(
@@ -114,17 +108,9 @@ def spike_events_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").alias("entity_id"), "event_type",
         F.col("prev_sum_val2").alias("sum_val"), F.lit("user").alias("scope"),
     )
-    cur_net = rollup_averages(
-        _cur_from(fused), group_cols=["event_type"], bucket_expr=F.expr(BUCKET),
-        bucket_name="bucket_id",
-    )
-    prev_net = rollup_averages(
-        _prev_from(fused), group_cols=["event_type"], bucket_expr=F.expr(BUCKET),
-        bucket_name="bucket_id",
-    )
-    net_cmp = compare_windows(
-        cur_net, prev_net, key_cols=["event_type", "bucket_id"], q=Q,
-        limit_new=LIMIT_NEW_NET, clamp_guard=False,
+    net_cmp = rollup_compare(
+        fused, group_cols=["event_type"], bucket_expr=F.expr(BUCKET),
+        bucket_name="bucket_id", q=Q, limit_new=LIMIT_NEW_NET,
     )
     net_alerts = spike_filter(net_cmp, q=Q).select(
         F.col("bucket_id").alias("entity_id"), "event_type",

@@ -307,10 +307,14 @@ def _spike_gate_body(spark, tmp, hist, now, zones, params):
         available_now=True,
     )
     q.awaitTermination()
+    # the detector appends nothing for an epoch without alerts, so a
+    # run that raised none leaves no table
     rows = (
         spark.read.parquet(f"{tmp}/alerts")
         .select("num_protocol", "type_proto", "dst_ip", "sum_val", "scope")
         .collect()
+        if os.path.isdir(f"{tmp}/alerts")
+        else []
     )
     return _local_rows(
         spark,

@@ -37,8 +37,8 @@ ALERTS_SCHEMA = T.StructType(
     [
         T.StructField("num_protocol", T.IntegerType(), False),
         T.StructField("type_proto", T.IntegerType(), False),
-        # LongType: detect_spikes derives sum_val via floor().cast("long")
-        # (exact.trunc_avg_exact) and the /32 path coalesces with long
+        # LongType: detect_spikes derives sum_val as a BIGINT average
+        # (exact.int_avg_floor) and the /32 path coalesces with long
         # literals, so the pipeline writes INT64 parquet. Declaring int32
         # here would make any read that materializes sum_val fail with
         # PARQUET_COLUMN_DATA_TYPE_MISMATCH under Spark 4.

@@ -5,8 +5,9 @@ each rule and remembers raised alerts in an in-memory dict that dies
 with the process (hha.py:223-249). Writing alerts to a table instead
 (a) survives restarts, (b) turns the TTL dedup into a broadcast
 anti-join against `recent_alerts`, and (c) gives downstream rule
-generators a queryable log. `collect_rules` keeps a driver-side path
-for parity tests and actual rule emission.
+generators a queryable log. `collect_rules` is the cycle's one action;
+`alerts_frame` turns the rules it collected back into the rows the
+append writes, so the append never re-evaluates the detection plan.
 """
 
 from __future__ import annotations
@@ -15,13 +16,23 @@ import ipaddress
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from hha_spark.functions.local import arrow_rows_frame
 from hha_spark.schemas import ALERTS_SCHEMA
 from hha_spark.sources import fs
 
+# ALERTS_SCHEMA less the detected_at stamp
+_RULE_SCHEMA = StructType([f for f in ALERTS_SCHEMA.fields if f.name != "detected_at"])
+
 
 def append_alerts(alerts: DataFrame, table_path: str, *, detected_at: int) -> None:
-    """Stamp and append a cycle's alerts."""
+    """Stamp and append a cycle's alerts.
+
+    The detection cycles pass `alerts_frame(...)` of the rules they
+    collected: a driver-local scan, because the plan that produced the
+    rules anti-joins against this very table, and re-evaluating it
+    after the write would suppress every alert just raised."""
     (
         alerts.withColumn("detected_at", F.lit(detected_at).cast("long"))
         # Cast every column to its declared type so the parquet footer
@@ -101,3 +112,20 @@ def collect_rules(alerts: DataFrame) -> list[dict]:
             }
         )
     return out
+
+
+def alerts_frame(spark: SparkSession, rules: list[dict]) -> DataFrame:
+    """`collect_rules` output back as alert rows for `append_alerts`
+    (which stamps `detected_at`): a driver-local Arrow frame (no Spark
+    job to build, a JVM-side scan to write), in one partition so an
+    append adds one file for `recent_alerts` to list, not one per
+    core."""
+    return arrow_rows_frame(
+        spark,
+        [
+            (r["num_protocol"], r["type_proto"], r["sum_val"],
+             int(ipaddress.IPv4Address(r["dst_ip"])), r["scope"])
+            for r in rules
+        ],
+        _RULE_SCHEMA,
+    ).coalesce(1)

@@ -50,7 +50,12 @@ from pyspark.sql import DataFrame, SparkSession
 from hha_spark.config import DetectorParams
 from hha_spark.operators.spike import detect_spikes
 from hha_spark.schemas import HISTOGRAM_SCHEMA
-from hha_spark.sinks.alerts import append_alerts, collect_rules, recent_alerts
+from hha_spark.sinks.alerts import (
+    alerts_frame,
+    append_alerts,
+    collect_rules,
+    recent_alerts,
+)
 from hha_spark.caching import release_tracked
 from hha_spark.sources.histograms import (
     SECONDS_PER_HOUR,
@@ -134,15 +139,18 @@ def make_batch_processor(
         )
         alerts = detect_spikes(
             hist, params=params, now=now, zones=zones, prior_alerts=prior
-        ).persist()
+        )
         try:
-            # collect BEFORE appending — the anti-join reads the table
-            # the append writes (see detector.run_cycle)
+            # one action, then append the collected rows (see
+            # detector.run_cycle: the anti-join reads the table the
+            # append writes)
             rules = collect_rules(alerts)
-            append_alerts(alerts, alerts_path, detected_at=now)
+            if rules:
+                append_alerts(
+                    alerts_frame(spark, rules), alerts_path, detected_at=now
+                )
         finally:
-            alerts.unpersist()
-            # release detect_spikes' registered persists per micro-batch
+            # release detect_spikes' registered persist per micro-batch
             release_tracked()
         if on_rules is not None:
             on_rules(rules)

@@ -33,7 +33,11 @@ rows_strategy = st.lists(
     st.tuples(
         st.integers(min_value=1, max_value=4),            # key
         st.integers(min_value=NOW - 3600, max_value=NOW),  # ts
-        st.integers(min_value=0, max_value=10_000),        # value
+        st.one_of(                                          # value
+            st.integers(min_value=0, max_value=10_000),
+            # past a DECIMAL(18,6) cast's range, sums still in int64
+            st.integers(min_value=10**12, max_value=10**15),
+        ),
     ),
     min_size=1,
     max_size=40,
@@ -47,11 +51,11 @@ def test_fused_equals_two_frame_compare(spark, rows):
     q, limit = 3, 500
     cur = window_averages(
         df, key_cols=["k"], value_col="v", time_col="ts",
-        lower=NOW - 90, exact=True,
+        lower=NOW - 90,
     )
     prev = window_averages(
         df, key_cols=["k"], value_col="v", time_col="ts",
-        upper=NOW - 300, exact=True,
+        upper=NOW - 300,
     )
     two_frame = {
         (r.k): (r.sum_val, r.prev_sum_val, r.prev_sum_val2)
@@ -70,6 +74,54 @@ def test_fused_equals_two_frame_compare(spark, rows):
         if r.sum_val is not None  # two-frame output = cur keys only
     }
     assert fused == two_frame
+    # and both are the exact floor average (S1) of the current window
+    cur_vals: dict[int, list[int]] = {}
+    for k, ts, v in rows:
+        if ts > NOW - 90:
+            cur_vals.setdefault(k, []).append(v)
+    assert {k: s[0] for k, s in fused.items()} == {
+        k: sum(vs) // len(vs) for k, vs in cur_vals.items()
+    }
+
+
+# --- fused detect_spikes (one /24 aggregate) == two-frame ------------------
+
+hist_strategy = st.lists(
+    st.tuples(
+        st.integers(min_value=1, max_value=2),            # num_protocol
+        st.integers(174327296, 174327296 + 511),          # dst_ip (2 /24s)
+        st.sampled_from([NOW - 10, NOW - 200, NOW - 400]),  # cur/dead/prev
+        st.integers(min_value=0, max_value=20_000),       # CountPkt
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+@given(rows=hist_strategy)
+@SET
+def test_fused_detect_spikes_equals_two_frame(spark, rows):
+    """The fused path's /24 branch (ONE NULL-aware aggregate over the
+    /32 frame, rollup_compare) must equal the reference-shape
+    rollup_averages x2 + compare_windows branch, alert for alert."""
+    from hha_spark.config import DetectorParams
+    from hha_spark.operators.spike import detect_spikes
+    from hha_spark.schemas import HISTOGRAM_SCHEMA
+
+    hist = spark.createDataFrame(
+        [(ts, 1, np_, 11, cnt, ip) for np_, ip, ts, cnt in rows], HISTOGRAM_SCHEMA
+    )
+    p = DetectorParams()
+
+    def alerts(fused):
+        return sorted(
+            tuple(r)
+            for r in detect_spikes(
+                hist, params=p, now=NOW, persist=False, fused=fused
+            ).collect()
+        )
+
+    assert alerts(True) == alerts(False)
 
 
 # --- inverted-index jaccard == naive set arithmetic ------------------------

@@ -111,3 +111,26 @@ def test_local_rows_arrow_localtablescan_roundtrip(spark):
     empty = _local_rows(spark, [], "k long, v string")
     assert empty.count() == 0
     assert empty.schema.simpleString() == df.schema.simpleString()
+
+
+def test_arrow_rows_frame_enforces_not_null(spark):
+    """A None in a column the schema declares NOT NULL raises at
+    construction (createDataFrame's cast to the schema's Arrow form);
+    nullable columns keep their NULLs. The alerts append goes through
+    this frame with ALERTS_SCHEMA, the watchlist with ZONES_SCHEMA."""
+    import pytest
+
+    from hha_spark.functions.local import arrow_rows_frame
+    from hha_spark.schemas import ALERTS_SCHEMA
+
+    ok = arrow_rows_frame(spark, [(65, 11, None, 7, "ip", 5)], ALERTS_SCHEMA)
+    assert ok.collect()[0].sum_val is None  # sum_val is nullable
+    for i, name in enumerate(ALERTS_SCHEMA.fieldNames()):
+        if name == "sum_val":
+            continue
+        row = [65, 11, 100, 7, "ip", 5]
+        row[i] = None
+        with pytest.raises(ValueError, match=repr(name)):
+            arrow_rows_frame(spark, [tuple(row)], ALERTS_SCHEMA)
+    with pytest.raises(ValueError, match="'k'"):
+        arrow_rows_frame(spark, [(None,)], "k long NOT NULL")

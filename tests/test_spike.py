@@ -8,11 +8,16 @@ watchlist gating, TTL dedup.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hha_spark.config import DetectorParams
 from hha_spark.functions.ip import net24_base
-from hha_spark.operators.spike import detect_spikes, window_averages
+from hha_spark.operators.spike import (
+    detect_spikes,
+    fused_window_compare,
+    window_averages,
+)
 from hha_spark.schemas import HISTOGRAM_SCHEMA, ZONES_SCHEMA
 
 P = DetectorParams()  # defaults: Q=3, L32=2500, L24=3500, TTL=300
@@ -255,3 +260,98 @@ def test_subagent_id_ignored(spark):
     )
     res = out.collect()
     assert len(res) == 1 and res[0].sum_val == 150
+
+
+KEYS = ["num_protocol", "type_proto", "dst_ip"]
+
+
+def _fused(df):
+    return fused_window_compare(
+        df, key_cols=KEYS, value_col="CountPkt", time_col="timestamp",
+        cur_lower=NOW - P.cur_window_sec, prev_upper=NOW - P.prev_window_sec,
+        q=P.quotient_amplification, limit_new=P.limit_new_data, clamp_guard=True,
+    )
+
+
+def test_average_exact_past_decimal_cast(spark):
+    """S1 at scale: samples >= 10^12 must count in the sum, not just the
+    count (a DECIMAL(18,6) cast turns them into NULL). Both the fused
+    and the two-frame averages are exact integer SUM DIV COUNT."""
+    rows = [
+        (CUR_TS, 65, 11, 999_999_999_999, IP_A),
+        (CUR_TS, 65, 11, 1_000_000_000_001, IP_A),
+    ]
+    df = hist_df(spark, rows)
+    [fused] = _fused(df).collect()
+    assert fused.sum_val == 1_000_000_000_000
+    [two_frame] = window_averages(
+        df, key_cols=KEYS, value_col="CountPkt", lower=NOW - P.cur_window_sec
+    ).collect()
+    assert two_frame.sum_val == 1_000_000_000_000
+
+
+def test_average_raises_past_int64(spark):
+    """A window sum past int64 raises instead of wrapping (non-ANSI SUM
+    wraps silently) in both the fused and the two-frame kernel."""
+    big = 6 * 10**18  # two of them overflow 2^63 - 1
+    df = hist_df(spark, key_rows((65, 11, IP_A), CUR_TS, big))
+    with pytest.raises(Exception, match="past int64"):
+        _fused(df).collect()
+    with pytest.raises(Exception, match="past int64"):
+        window_averages(
+            df, key_cols=KEYS, value_col="CountPkt", lower=NOW - P.cur_window_sec
+        ).collect()
+
+
+def test_warm_cycle_runs_one_materialization(spark, tmp_path, monkeypatch):
+    """A warm run_cycle evaluates its S1-S8 plan once: the append
+    writes the collected alerts from a driver-local scan (no
+    FileScan of the histogram root, no cached plan to re-read), the
+    fused aggregate sums as BIGINT (no decimal), and nothing stays
+    pinned after the cycle."""
+    import hha_spark.detector as detector
+    from hha_spark.caching import pinned_rdd_count
+    from hha_spark.sources.histograms import write_partitioned
+    from hha_spark.sources.watchlist import zones_from_ints
+
+    base = pinned_rdd_count(spark)
+    data_root = str(tmp_path / "hist")
+    alerts_path = str(tmp_path / "alerts")
+    rows = (
+        key_rows((65, 11, IP_A), CUR_TS, 8000)        # alerts in cycle 1
+        + key_rows((68, 11, IP_B), NOW + 5, 9000)     # new in cycle 2
+        + key_rows((2888, 32, IP_C), PREV_TS, 182)
+    )
+    write_partitioned(hist_df(spark, rows), data_root)
+    zones = zones_from_ints(spark, [IP_A, IP_B])
+
+    def cycle(now):
+        return detector.run_cycle(
+            spark, data_root=data_root, alerts_path=alerts_path,
+            params=P, zones=zones, now=now,
+        )
+
+    assert [r["scope"] for r in cycle(NOW)] == ["ip"]  # creates the table
+    plans = {}
+    collect, append = detector.collect_rules, detector.append_alerts
+
+    def spy_collect(alerts):
+        plans["detect"] = alerts._jdf.queryExecution().analyzed().toString()
+        return collect(alerts)
+
+    def spy_append(frame, path, **kw):
+        plans["append"] = frame._jdf.queryExecution().executedPlan().toString()
+        return append(frame, path, **kw)
+
+    monkeypatch.setattr(detector, "collect_rules", spy_collect)
+    monkeypatch.setattr(detector, "append_alerts", spy_append)
+    # warm: IP_A is suppressed by the TTL anti-join against the table
+    # this cycle appends to; IP_B alerts
+    rules = cycle(NOW + 10)
+    assert [(r["dst_ip"], r["scope"]) for r in rules] == [("10.100.6.19", "ip")]
+    assert "LocalTableScan" in plans["append"]
+    assert "FileScan" not in plans["append"]
+    assert "InMemory" not in plans["append"]
+    assert "try_sum" in plans["detect"]
+    assert "decimal" not in plans["detect"].lower()
+    assert pinned_rdd_count(spark) <= base
